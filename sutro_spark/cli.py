@@ -160,14 +160,14 @@ def _cli_registry():
 
 def jobs_status(job_id: str) -> str:
     """``jobs status`` (reference cli.py:204-214). Jobs live in a
-    per-session registry; a job unknown to this process but present in
-    the results cache reports SUCCEEDED (the cache is only written on
-    success)."""
-    from sutro_spark.operators.results import cache_path
+    per-session registry; a job unknown to this process but with a
+    complete results directory in the cache reports SUCCEEDED (failed
+    and cancelled jobs leave none)."""
+    from sutro_spark.operators.results import cache_path, is_complete
     from sutro_spark.plans.jobs import JobStatus
 
     status = _cli_registry().get_job_status(job_id)
-    if status is JobStatus.UNKNOWN and os.path.isdir(cache_path(job_id)):
+    if status is JobStatus.UNKNOWN and is_complete(cache_path(job_id)):
         return JobStatus.SUCCEEDED.value
     return status.value
 
@@ -177,10 +177,10 @@ def jobs_attach(job_id: str | None, *, latest: bool = False) -> int:
     ``--latest`` picks the newest job from the registry table; no id and
     no flag is a usage message. Jobs live in a per-session registry, so
     a job from another process is resolved via the results cache and
-    reported as already completed (the cache is only written on
-    success), matching the reference's done-job short-circuit
-    (sdk.py:873-879)."""
-    from sutro_spark.operators.results import cache_path
+    reported as already completed (only a succeeded job leaves a
+    complete results directory), matching the reference's done-job
+    short-circuit (sdk.py:873-879)."""
+    from sutro_spark.operators.results import cache_path, is_complete
     from sutro_spark.plans.jobs import JobStatus
     from sutro_spark.sdk import SutroSpark
     from sutro_spark.session import get_spark
@@ -196,7 +196,7 @@ def jobs_attach(job_id: str | None, *, latest: bool = False) -> int:
     elif not job_id:
         print("No job ID provided.")
         return 1
-    if reg.get_job_status(job_id) is JobStatus.UNKNOWN and os.path.isdir(cache_path(job_id)):
+    if reg.get_job_status(job_id) is JobStatus.UNKNOWN and is_complete(cache_path(job_id)):
         print(
             "Job already completed. You can obtain the results with"
             f" `sutro jobs results {job_id}`"
@@ -216,15 +216,18 @@ def jobs_results(
     save_format: str = "parquet",
     output_dir: str = ".",
 ) -> DataFrame | None:
-    """``jobs results`` (reference cli.py:216-262): cache-first fetch,
-    optional parquet/csv save named after the job id."""
+    """``jobs results`` (reference cli.py:216-262): cache-first fetch
+    (outputs as ``inference_result``, unpacked with the job's stored
+    schema), optional parquet/csv save named after the job id."""
     from sutro_spark.operators.results import read_result_cache, save_results
+    from sutro_spark.sdk import shape_outputs
     from sutro_spark.session import get_spark
 
     spark = get_spark("cli", cpus=4)
     res = read_result_cache(spark, job_id, [])
     if res is None:
         return None
+    res = shape_outputs(res, "inference_result", sniff=False)
     drop = []
     if not include_inputs and "__prompt" in res.columns:
         drop.append("__prompt")

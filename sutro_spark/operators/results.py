@@ -7,6 +7,7 @@ original table, parquet result cache with schema-superset reuse.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +19,26 @@ from sutro_spark.sources.ingest import ROW_ID
 def rename_output(df: DataFrame, output_column: str) -> DataFrame:
     """P4 — ``results.rename({"outputs": output_column})`` (sdk.py:1231)."""
     return df.withColumnRenamed("outputs", output_column)
+
+
+# column-metadata key under which a job's declared output schema rides
+# the ``outputs`` column into the parquet cache (Spark keeps column
+# metadata in the file's footer), so any later reader unpacks with it
+OUTPUT_SCHEMA_KEY = "sutro_output_schema"
+
+
+def tag_output_schema(df: DataFrame, output_schema: dict) -> DataFrame:
+    """Attach the declared JSON schema to the raw ``outputs`` column."""
+    return df.withMetadata("outputs", {OUTPUT_SCHEMA_KEY: json.dumps(output_schema)})
+
+
+def output_schema_of(df: DataFrame) -> dict | None:
+    """The JSON schema stored on ``outputs`` by :func:`tag_output_schema`,
+    or None for schema-less outputs (or no ``outputs`` column)."""
+    if "outputs" not in df.columns:
+        return None
+    stored = df.schema["outputs"].metadata.get(OUTPUT_SCHEMA_KEY)
+    return json.loads(stored) if stored else None
 
 
 def exp_confidence(
@@ -139,6 +160,13 @@ def cache_path(job_id: str) -> str:
     return os.path.join(cache_dir(), f"{job_id}.parquet")
 
 
+def is_complete(path: str) -> bool:
+    """A results directory counts only once Spark's commit wrote its
+    ``_SUCCESS`` marker; a failed, cancelled or killed write leaves
+    none."""
+    return os.path.isfile(os.path.join(path, "_SUCCESS"))
+
+
 def write_result_cache(df: DataFrame, job_id: str) -> str:
     """Persist results keyed by job id (sdk.py:1233-1235 writes snappy
     parquet; snappy is Spark's default parquet codec too)."""
@@ -148,11 +176,12 @@ def write_result_cache(df: DataFrame, job_id: str) -> str:
 
 
 def read_result_cache(
-    spark: SparkSession, job_id: str, expected_columns: list[str]
+    spark: SparkSession, job_id: str, expected_columns: list[str], path: str | None = None
 ) -> DataFrame | None:
-    """Reuse iff the cached columns ⊇ expected (sdk.py:1159-1172)."""
-    path = cache_path(job_id)
-    if not os.path.isdir(path):
+    """Reuse iff the cached columns ⊇ expected (sdk.py:1159-1172).
+    ``path`` overrides the job id's cache path."""
+    path = path or cache_path(job_id)
+    if not is_complete(path):
         return None
     df = spark.read.parquet(path)
     if not set(expected_columns) <= set(df.columns):

@@ -10,10 +10,17 @@ Spark mapping: a driver-side registry backed by a plain dict (exposed
 as a DataFrame for relational queries); execution is an async Spark
 action tagged with a job group so ``cancel`` maps to
 ``sc.cancelJobGroup``; priorities map to FAIR scheduler pools.
+
+One materialization per job: the job's only action writes its plan to
+the parquet results cache (``cache_path(job_id)``, the reference's
+per-job parquet, sdk.py:1233), with the row count riding that write as
+an observed metric. The registry keeps the path, never a DataFrame, and
+every results fetch is a read of that file.
 """
 
 from __future__ import annotations
 
+import shutil
 import threading
 import time
 import uuid
@@ -21,7 +28,10 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from enum import Enum
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from sutro_spark.operators.results import cache_path
 
 MAX_NAME_LEN = 45  # sdk.py:38
 MAX_DESCRIPTION_LEN = 512  # sdk.py:39
@@ -60,6 +70,7 @@ class Job:
     output_tokens: int = 0
     cost_estimate: float = 0.0
     failure_reason: str | None = None
+    results_path: str | None = None  # the job's parquet results
     datetime_created: datetime = field(
         default_factory=lambda: datetime.now(timezone.utc)
     )
@@ -84,7 +95,6 @@ class JobRegistry:
         self.jobs: dict[str, Job] = {}
         self.quotas = quotas or dict(DEFAULT_QUOTAS)
         self._threads: dict[str, threading.Thread] = {}
-        self._results: dict[str, DataFrame] = {}
         self._progress: dict[str, object] = {}  # job_id → accumulator
         self._lock = threading.Lock()
 
@@ -103,19 +113,14 @@ class JobRegistry:
         model: str = "stub-echo",
         priority: int = 0,
         rows_total: int | None = None,
-        materialize: bool = True,
-        durable: bool = False,
         progress_accumulator=None,
     ) -> str:
-        """Validate, register, and launch the plan as an async action in
-        its own job group (cancellable). Submission is never retried —
-        a failed launch surfaces immediately (reference analog:
-        sdk.py:247-252, max_retries=0 on POST /batch-inference).
-
-        ``durable=True`` materializes straight into the parquet result
-        cache instead of Spark block-manager memory — the scale-safe
-        setting (results can exceed cluster memory; the reference
-        similarly lands results in its parquet cache, sdk.py:1233-1235).
+        """Validate, register, and launch the plan as an async write of
+        its parquet results in its own job group (cancellable).
+        Submission is never retried — a failed launch surfaces
+        immediately (reference analog: sdk.py:247-252, max_retries=0 on
+        POST /batch-inference). A failed or cancelled job leaves no
+        results directory behind.
         """
         if name is not None and len(name) > MAX_NAME_LEN:
             raise ValueError(f"name must be <= {MAX_NAME_LEN} characters")
@@ -131,6 +136,7 @@ class JobRegistry:
             model=model,
             priority=priority,
             rows_total=rows_total or 0,
+            results_path=cache_path(job_id),
         )
         with self._lock:
             self.jobs[job_id] = job
@@ -145,40 +151,31 @@ class JobRegistry:
                 "spark.scheduler.pool", "production" if priority == 1 else "prototyping"
             )
             job.status = JobStatus.RUNNING
+            error = None
             try:
-                if materialize and durable:
-                    from sutro_spark.operators.results import cache_path
-
-                    path = cache_path(job_id)
-                    df.write.mode("overwrite").parquet(path)
-                    out = self.spark.read.parquet(path)
-                    n = out.count()
-                elif materialize:
-                    out = df.cache()
-                    n = out.count()
-                if materialize:
-                    job.rows_completed = n
-                    if not job.rows_total:
-                        job.rows_total = n
-                    with self._lock:
-                        self._results[job_id] = out
-                # Terminal transition under the lock: a cancel_job() racing
-                # in after the last Spark action must win (CANCELLING →
-                # CANCELLED, never SUCCEEDED).
-                with self._lock:
-                    if job.status == JobStatus.CANCELLING:
-                        job.status = JobStatus.CANCELLED
-                    else:
-                        job.status = JobStatus.SUCCEEDED
+                obs = Observation()
+                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(job.results_path)
+                job.rows_completed = obs.get["rows"]
+                job.rows_total = job.rows_total or job.rows_completed
             except Exception as e:  # noqa: BLE001 - failure_reason capture (C12)
-                with self._lock:
-                    if job.status == JobStatus.CANCELLING:
-                        job.status = JobStatus.CANCELLED
-                    else:
-                        job.status = JobStatus.FAILED
-                        job.failure_reason = str(e)[:500]
-            finally:
+                error = str(e)[:500]
+            # Terminal transition under the lock: a cancel_job() racing
+            # in after the write must win (CANCELLING → CANCELLED, never
+            # SUCCEEDED), and the partial directory is gone before the
+            # terminal status is visible.
+            with self._lock:
                 job.datetime_completed = datetime.now(timezone.utc)
+                if job.status == JobStatus.CANCELLING or error is not None:
+                    shutil.rmtree(job.results_path, ignore_errors=True)
+                if job.status == JobStatus.CANCELLING:
+                    job.status = JobStatus.CANCELLED
+                elif error is not None:
+                    job.status = JobStatus.FAILED
+                    job.failure_reason = error
+                else:
+                    job.status = JobStatus.SUCCEEDED
 
         job.status = JobStatus.STARTING
         t = threading.Thread(target=run, name=job_id, daemon=True)
@@ -226,9 +223,7 @@ class JobRegistry:
         while time.time() < deadline:
             status = self.get_job_status(job_id)
             if status.is_terminal:
-                if status is JobStatus.SUCCEEDED:
-                    return self._results.get(job_id)
-                return None
+                return self.get_job_results(job_id)
             # local threads finish fast; poll finely but honor the contract
             self._threads[job_id].join(timeout=min(poll_interval, 0.05))
             if not self._threads[job_id].is_alive():
@@ -282,5 +277,16 @@ class JobRegistry:
         )
         return self.spark.createDataFrame(rows, schema)
 
+    def results_path(self, job_id: str) -> str:
+        """Where the job's parquet results live: fixed at submit for a
+        job this registry knows, else the cache path for its id."""
+        job = self.jobs.get(job_id)
+        return job.results_path if job is not None else cache_path(job_id)
+
     def get_job_results(self, job_id: str) -> DataFrame | None:
-        return self._results.get(job_id)
+        """The succeeded job's parquet results, read fresh (None for a
+        job that is unknown or did not succeed)."""
+        job = self.jobs.get(job_id)
+        if job is None or job.status is not JobStatus.SUCCEEDED:
+            return None
+        return self.spark.read.parquet(job.results_path)

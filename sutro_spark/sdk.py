@@ -22,15 +22,36 @@ from pyspark.sql import DataFrame, SparkSession
 from sutro_spark.functions.prompt import normalize_output_schema
 from sutro_spark.operators import templates as _templates
 from sutro_spark.operators.results import (
+    output_schema_of,
     read_result_cache,
     rename_output,
-    write_result_cache,
+    tag_output_schema,
+    write_result_cache,  # noqa: F401 - unused here; perfbench traces sdk.write_result_cache
 )
 from sutro_spark.operators.transform import llm_transform
 from sutro_spark.operators.unpack import unpack_json_outputs
 from sutro_spark.plans.cost import estimate_cost
 from sutro_spark.plans.jobs import JobRegistry, JobStatus
 from sutro_spark.sources.ingest import prepare_input_data
+
+
+def shape_outputs(
+    res: DataFrame, output_column: str, *, unpack_json: bool = True, sniff: bool = True
+) -> DataFrame:
+    """Turn a job's stored results (raw ``outputs``, reference layout
+    sdk.py:1230-1233) into the user's view: rename ``outputs`` →
+    ``output_column``, then unpack the JSON fields (sdk.py:1278-1320)
+    with the job's stored schema — or, with ``sniff``, by probing row 0
+    when the job declared none. A cache file without ``outputs`` was
+    written before jobs stored the raw layout and already holds the
+    user's view, so it is returned as is."""
+    if "outputs" not in res.columns:
+        return res
+    schema = output_schema_of(res)
+    res = rename_output(res, output_column)
+    if unpack_json and (schema is not None or sniff):
+        res = unpack_json_outputs(res, output_column, schema)
+    return res
 
 
 class SutroSpark:
@@ -129,28 +150,25 @@ class SutroSpark:
         )
         if dry_run:
             return self.estimate_cost(df, column or "prompt", model=model)
+        if schema_dict is not None:
+            out = tag_output_schema(out, schema_dict)
         job_id = self.registry.submit(
             out, name=name, description=description, model=model, priority=job_priority
         )
         if not stay_attached:
             return job_id
         return self._finalize_results(
-            job_id, output_column, schema_dict, unpack_json=unpack_json,
-            show_preview=show_preview,
+            job_id, output_column, unpack_json=unpack_json, show_preview=show_preview
         )
 
-    def _finalize_results(
-        self, job_id, output_column, schema_dict, *, unpack_json=True, show_preview=False
-    ):
+    def _finalize_results(self, job_id, output_column, *, unpack_json=True, show_preview=False):
         res = self.registry.await_job_completion(job_id)
         if res is None:
             raise RuntimeError(
                 f"job {job_id} failed: {self.registry.get_failure_reason(job_id)}"
             )
-        res = rename_output(res, output_column)
-        if unpack_json and schema_dict is not None:
-            res = unpack_json_outputs(res, output_column, schema_dict)
-        write_result_cache(res, job_id)  # cache keeps __prompt for include_inputs
+        # the attached view unpacks only a declared schema, never sniffs
+        res = shape_outputs(res, output_column, unpack_json=unpack_json, sniff=False)
         res = res.drop("__prompt")
         if show_preview:
             # the attached-run preview print (reference sdk.py:437-459);
@@ -283,8 +301,8 @@ class SutroSpark:
         disable_cache: bool = False,
         unpack_json: bool = True,
     ):
-        """Cache-first results fetch (reference: sdk.py:1131-1340 —
-        reuse iff cached columns ⊇ expected).
+        """Results fetch: a read of the job's parquet file (reference:
+        sdk.py:1131-1340).
 
         - ``include_inputs`` resurfaces the shipped prompt as an
           ``inputs`` column, ordered first (sdk.py:1251-1276);
@@ -292,26 +310,22 @@ class SutroSpark:
           original frame by row position — the reference's polars
           ``with_columns`` (sdk.py:1322-1334), here an equi-join on the
           engine-wide ``__row_id``; result columns win name collisions
-          exactly like ``with_columns`` does.
+          exactly like ``with_columns`` does;
+        - ``disable_cache`` is accepted for parity and has no effect: a
+          job's results exist only as its parquet file, so every fetch
+          reads it.
         """
         from sutro_spark.operators.results import order_results, positional_join
         from sutro_spark.sources.ingest import ROW_ID, with_row_id
 
-        expected = [output_column]
-        if include_inputs:
-            expected.append("__prompt")
-        if include_cumulative_logprobs:
-            expected.append("cumulative_logprobs")
-        res = None
-        if not disable_cache:
-            res = read_result_cache(self.spark, job_id, expected)
-        if res is None:
-            res = self.registry.get_job_results(job_id)
-            if res is None:
-                raise ValueError(f"no results for job {job_id}")
-            res = rename_output(res, output_column)
-            if unpack_json:
-                res = unpack_json_outputs(res, output_column)
+        # no server to refetch from: the job's file is the only copy, so
+        # a missing optional column is tolerated below, not a miss
+        res = read_result_cache(self.spark, job_id, [], path=self.registry.results_path(job_id))
+        # raw ``outputs``, or ``output_column`` in a cache written before
+        # jobs stored the raw layout
+        if res is None or not {"outputs", output_column} & set(res.columns):
+            raise ValueError(f"no results for job {job_id}")
+        res = shape_outputs(res, output_column, unpack_json=unpack_json)
         if include_inputs and "__prompt" in res.columns:
             res = res.withColumnRenamed("__prompt", "inputs")
         elif "__prompt" in res.columns:

@@ -9,6 +9,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set,
+    else about half the host's ``MemTotal`` (whole MiB, at least 1g), so
+    the local-mode JVM — driver and executors in one heap — leaves room
+    for the Python workers and the OS. Falls back to 4g where
+    ``meminfo`` is unreadable (non-Linux hosts)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(kib // 2048, 1024)}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(app_name: str = "sutro_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -30,7 +50,7 @@ def get_spark(app_name: str = "sutro_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

@@ -98,6 +98,30 @@ def test_jobs_results_from_cache_with_save(spark, documents, isolated_cache, tmp
     assert spark.read.parquet(str(tmp_path / "job-cli-2.parquet")).count() == 4
 
 
+def test_jobs_results_shapes_raw_job_outputs(spark, documents, isolated_cache):
+    # the job's file holds raw ``outputs``; like the reference CLI, which
+    # fetches with the SDK defaults, ``jobs results`` names the column
+    # ``inference_result`` and unpacks it with the job's stored schema,
+    # whatever output_column/unpack_json the attached run used
+    from sutro_spark.sdk import SutroSpark
+
+    schema = {
+        "type": "object",
+        "properties": {"summary": {"type": "string"}, "quality": {"type": "integer"}},
+    }
+    so = SutroSpark(spark)
+    so.infer(
+        documents.limit(3), column="text", output_schema=schema, name="cli-shape",
+        output_column="extraction", unpack_json=False,
+    )
+    job_id = next(j for j, job in so.registry.jobs.items() if job.name == "cli-shape")
+    res = jobs_results(job_id)
+    assert {"summary", "quality"} <= set(res.columns)
+    assert dict(res.dtypes)["quality"] in ("int", "bigint")
+    assert "extraction" not in res.columns and "outputs" not in res.columns
+    assert res.count() == 3
+
+
 def test_jobs_results_missing_returns_error(isolated_cache, capsys):
     assert main(["jobs", "results", "job-absent"]) == 1
     assert "No results found" in capsys.readouterr().err

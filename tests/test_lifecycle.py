@@ -35,7 +35,7 @@ def test_job_durable_materialization_and_progress(spark, documents, tmp_path, mo
     reg = JobRegistry(spark)
     acc = reg.make_progress_accumulator()
     out = llm_transform(documents, "text", progress_accumulator=acc)
-    job_id = reg.submit(out, name="durable", durable=True, progress_accumulator=acc)
+    job_id = reg.submit(out, name="durable", progress_accumulator=acc)
     res = reg.await_job_completion(job_id, timeout=120)
     n = documents.count()
     assert res.count() == n
@@ -59,6 +59,76 @@ def test_job_validation_and_failure(spark, documents):
     assert reg.await_job_completion(job_id, timeout=120) is None
     assert reg.get_job_status(job_id) is JobStatus.FAILED
     assert "kaboom" in (reg.get_failure_reason(job_id) or "")
+
+
+def test_failed_job_leaves_no_results(spark, documents, tmp_path, monkeypatch):
+    import os
+
+    from sutro_spark.cli import jobs_status
+    from sutro_spark.operators.results import cache_path
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    reg = JobRegistry(spark)
+    bad = documents.withColumn("boom", F.expr("raise_error('kaboom')"))
+    job_id = reg.submit(bad, name="failing")
+    assert reg.await_job_completion(job_id, timeout=120) is None
+    assert reg.get_job_status(job_id) is JobStatus.FAILED
+    assert reg.get_job_results(job_id) is None
+    # the partial write is removed, so a fresh registry cannot take the
+    # job for a succeeded one
+    assert not os.path.exists(cache_path(job_id))
+    assert jobs_status(job_id) == "UNKNOWN"
+
+
+def test_cancelled_job_leaves_no_results(spark, documents, tmp_path, monkeypatch):
+    import os
+
+    from sutro_spark.operators.results import cache_path
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    reg = JobRegistry(spark)
+    slow = documents.limit(4).coalesce(1).withColumn(
+        "nap", F.expr("reflect('java.lang.Thread', 'sleep', CAST(3000 AS BIGINT))")
+    )
+    job_id = reg.submit(slow, name="slow")
+    deadline = time.time() + 60
+    while reg.get_job_status(job_id) is not JobStatus.RUNNING and time.time() < deadline:
+        time.sleep(0.05)
+    time.sleep(1.0)  # inside the first row's sleep
+    reg.cancel_job(job_id)
+    assert reg.await_job_completion(job_id, timeout=120) is None
+    assert reg.get_job_status(job_id) is JobStatus.CANCELLED
+    assert not os.path.exists(cache_path(job_id))
+
+
+def test_results_dir_counts_only_with_success_marker(spark, documents, tmp_path, monkeypatch):
+    import os
+
+    from sutro_spark.cli import jobs_status
+    from sutro_spark.operators.results import cache_path, is_complete
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    path = write_result_cache(documents.limit(3), "job-marker")
+    assert is_complete(path) and jobs_status("job-marker") == "SUCCEEDED"
+    # a write killed before its commit leaves a directory without _SUCCESS
+    os.remove(os.path.join(path, "_SUCCESS"))
+    assert not is_complete(cache_path("job-marker"))
+    assert read_result_cache(spark, "job-marker", []) is None
+    assert jobs_status("job-marker") == "UNKNOWN"
+
+
+def test_driver_memory_sizing(tmp_path, monkeypatch):
+    from sutro_spark.session import driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16456384 kB\nMemFree:        14700296 kB\n")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert driver_memory(str(meminfo)) == "8035m"  # half of MemTotal, in MiB
+    meminfo.write_text("MemTotal:        1048576 kB\n")
+    assert driver_memory(str(meminfo)) == "1024m"  # never below 1g
+    assert driver_memory(str(tmp_path / "absent")) == "4g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert driver_memory(str(meminfo)) == "1g"  # the override wins
 
 
 def test_quota_check(spark):

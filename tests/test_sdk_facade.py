@@ -57,8 +57,65 @@ def test_results_cache_roundtrip(so, documents, tmp_path, monkeypatch):
     job_id = so.infer(documents.limit(5), column="text", stay_attached=False)
     so.await_job_completion(job_id, timeout=120)
     first = so.get_job_results(job_id, output_column="out")
-    again = so.get_job_results(job_id, output_column="out")  # cache hit
+    # cache hit: a fresh facade's registry does not know the job, so
+    # these rows can only come from the parquet cache
+    again = SutroSpark(so.spark).get_job_results(job_id, output_column="out")
     assert first.count() == again.count() == 5
+    assert first.collect() == again.collect()
+
+
+def test_schema_results_reread_from_cache(so, documents, tmp_path, monkeypatch):
+    import json
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    res = so.infer(documents.limit(8), column="text", output_schema=SCHEMA, name="reread")
+    job_id = next(j for j, job in so.registry.jobs.items() if job.name == "reread")
+    fresh = SutroSpark(so.spark)  # same cache, empty registry
+    again = fresh.get_job_results(job_id)
+    # the stored schema types the columns, exactly as the attached run did
+    assert again.schema == res.drop("__row_id").schema
+    assert again.collect() == res.orderBy("__row_id").drop("__row_id").collect()
+    raw = fresh.get_job_results(job_id, unpack_json=False)
+    assert "inference_result" in raw.columns and "summary" not in raw.columns
+    decoded = [json.loads(r["inference_result"]) for r in raw.collect()]
+    assert [d["summary"] for d in decoded] == [r["summary"] for r in again.collect()]
+    renamed = fresh.get_job_results(job_id, output_column="extraction", unpack_json=False)
+    assert "extraction" in renamed.columns and "inference_result" not in renamed.columns
+
+
+def test_legacy_cache_layout_is_a_hit(so, documents, tmp_path, monkeypatch):
+    # a cache written before jobs stored raw ``outputs`` holds the
+    # attached view under its output column; it is still served as is
+    from sutro_spark.operators.results import write_result_cache
+    from sutro_spark.operators.transform import llm_transform
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    legacy = llm_transform(
+        documents.limit(4), "text", output_column="inference_result", keep_prompt=True
+    )
+    assert "outputs" not in legacy.columns and "inference_result" in legacy.columns
+    write_result_cache(legacy, "job-legacy")
+    res = SutroSpark(so.spark).get_job_results("job-legacy", include_inputs=True)
+    assert res.count() == 4
+    assert {"inputs", "inference_result"} <= set(res.columns)
+    with pytest.raises(ValueError, match="no results"):
+        SutroSpark(so.spark).get_job_results("job-legacy", output_column="other")
+
+
+def test_jobs_pin_no_dataframes_or_cached_blocks(so, documents):
+    from pyspark.sql import DataFrame
+
+    jsc = so.spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    for i in range(3):
+        so.infer(documents.limit(5), column="text", output_schema=SCHEMA, name=f"leak-{i}")
+    # a job's only materialization is its parquet write: nothing cached
+    assert jsc.getPersistentRDDs().size() == before
+    reg = so.registry
+    held = list(vars(reg).values())
+    held += [v for d in held if isinstance(d, dict) for v in d.values()]
+    held += [v for job in reg.jobs.values() for v in vars(job).values()]
+    assert not any(isinstance(v, DataFrame) for v in held)
 
 
 def test_templates_through_facade(so, documents):
