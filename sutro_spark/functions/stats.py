@@ -406,7 +406,8 @@ def mad_outliers(
     Degenerate groups (mad_med2 = 0: more than half the values equal
     the median) flag EVERY value off the median, per the standard MAD
     rule — filter on mad_med2 > 0 downstream if that is too eager.
-    Groups need n >= 2 (a singleton is its own median; never flagged).
+    Groups need n >= 2 (a singleton is its own median; never flagged);
+    rows with a null value are dropped first, so n counts values.
 
     Scale note (r17 optimization round, guide §1.2): both doubled
     medians come from ONE ``percentile(col, 0.5)`` aggregate per pass
@@ -430,11 +431,13 @@ def mad_outliers(
         raise ValueError("k must be a positive rational (num, den)")
 
     cents = F.round(F.col(value_column) * 100).cast("long")
+    # percentile() skips nulls, so n must too: a null value is neither
+    # counted toward a group's size nor a candidate outlier
     scoped = df.select(
         F.col(id_column).alias("id"),
         F.col(group_column).alias("grp"),
         cents.alias("cents"),
-    )
+    ).where(F.col("cents").isNotNull())
     stats = scoped.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.expr("percentile(cents, 0.5D)") * 2).cast("long").alias("med2"),

@@ -4,7 +4,8 @@
 Split by scale:
 - **A1 pairwise win/tie counts** is the big-data half — ballots can be
   billions of rows — so it is pure relational Spark: posexplode + self
-  equi-join on the ballot id + groupBy. Shuffles on (ballot id) then
+  equi-join on the ballot id + ONE groupBy that counts wins and ties
+  together as conditional counts. Shuffles on (ballot id) then
   (winner, loser); both keys are high-cardinality and unskewed.
 - **A2 Bradley-Terry MM → Elo** operates on a |labels|² matrix — never
   big data — so it is deliberately driver-side numpy (the reference does
@@ -12,6 +13,7 @@ Split by scale:
   for the Bradley-Terry model, ties counted as half-wins both ways,
   Laplace smoothing on directed edges, geometric-mean-1 normalization,
   tol 1e-8, <=1000 iterations; elo = 400/ln(10) * ln(s) centered at 1500.
+  The fitted ratings come back to Spark as an Arrow local relation.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sutro_spark.sources.ingest import ROW_ID, with_row_id
+from sutro_spark.sources.ingest import ROW_ID, local_frame, with_row_id
 
 _BALLOT = "__ballot_id"
 
@@ -51,43 +53,36 @@ def pairwise_counts(
     sharing a position tie (+1 per unordered pair).
 
     Returns (winner, loser, wins, ties) — ties are symmetric and reported
-    on the lexicographically-ordered pair only.
+    on the lexicographically-ordered pair only. A pair appears when it
+    has a win or a tie; both counts come from one grouped aggregate of
+    conditional counts over the pairs that are either.
 
     Scale shape — MEASURED, do not "optimize" into array lambdas: at
     1.2M ballots (sf0.1 ×8) this posexplode + ballot-id equi-join runs
     ~21 s while the join-free rewrite via nested higher-order functions
     (flatten/transform/filter generating pair structs in-scan) takes
     30–110 s — Catalyst HOF lambdas are interpreted per element, while
-    the hash self-join and both count aggregates stay inside
-    whole-stage codegen. The ballot id is ``monotonically_increasing_id``
-    (zero shuffle); the join key is high-cardinality and unskewed, so
-    the equi-join partitions cleanly at any ballot count.
+    the hash self-join and the count aggregate stay inside whole-stage
+    codegen. The ballot id is ``monotonically_increasing_id`` (zero
+    shuffle); the join key is high-cardinality and unskewed, so the
+    equi-join partitions cleanly at any ballot count.
     """
     ex = _exploded(df, ranking_column, tie_delimiter)
     w = ex.alias("w")
     l = ex.alias("l")
-    joined = w.join(l, F.col(f"w.{_BALLOT}") == F.col(f"l.{_BALLOT}"))
-    wins = (
+    before = F.col("w.pos") < F.col("l.pos")
+    tied = F.col("w.pos") == F.col("l.pos")
+    return (
+        w.join(l, F.col(f"w.{_BALLOT}") == F.col(f"l.{_BALLOT}"))
         # label != label guard: a label appearing at two positions in one
         # ballot must not produce a self-win row (reference skips w == l,
-        # evals.py:234).
-        joined.where((F.col("w.pos") < F.col("l.pos")) & (F.col("w.label") != F.col("l.label")))
-        .groupBy(F.col("w.label").alias("winner"), F.col("l.label").alias("loser"))
-        .agg(F.count(F.lit(1)).alias("wins"))
-    )
-    ties = (
-        joined.where((F.col("w.pos") == F.col("l.pos")) & (F.col("w.label") < F.col("l.label")))
-        .groupBy(F.col("w.label").alias("winner"), F.col("l.label").alias("loser"))
-        .agg(F.count(F.lit(1)).alias("ties"))
-    )
-    return (
-        wins.join(ties, on=["winner", "loser"], how="full")
-        .select(
-            "winner",
-            "loser",
-            F.coalesce("wins", F.lit(0)).alias("wins"),
-            F.coalesce("ties", F.lit(0)).alias("ties"),
+        # evals.py:234); a tie counts once, on the ordered pair.
+        .where(
+            (before & (F.col("w.label") != F.col("l.label")))
+            | (tied & (F.col("w.label") < F.col("l.label")))
         )
+        .groupBy(F.col("w.label").alias("winner"), F.col("l.label").alias("loser"))
+        .agg(F.count_if(before).alias("wins"), F.count_if(tied).alias("ties"))
     )
 
 
@@ -166,7 +161,6 @@ def elo(
     """A1+A2+A3 — full pipeline: distributed pairwise counts, driver-side
     BT fit, ratings table sorted by elo desc (reference returns ratings
     only, evals.py:336)."""
-    spark = df.sparkSession
     counts = [
         (r["winner"], r["loser"], r["wins"], r["ties"])
         for r in pairwise_counts(df, ranking_column, tie_delimiter).collect()
@@ -175,10 +169,7 @@ def elo(
         counts, laplace=laplace, max_iter=max_iter, tol=tol, elo_mean=elo_mean
     )
     schema = "label string, elo double, strength double, wins double, losses double, matches double"
-    return spark.createDataFrame(
-        [(r["label"], r["elo"], r["strength"], r["wins"], r["losses"], r["matches"]) for r in ratings],
-        schema,
-    )
+    return local_frame(df.sparkSession, ratings, schema)
 
 
 def ratings_markdown(ratings: DataFrame) -> str:

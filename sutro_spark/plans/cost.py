@@ -42,15 +42,13 @@ def estimate_cost(
 
     Reads rows until ~``sample_token_budget`` input tokens are seen
     (bounded by a limit pushed to the scan), extrapolates to the full
-    row count (one cheap count aggregate), and prices input+output.
+    row count, and prices input+output. A prefix shorter than its limit
+    is the whole input, so the count aggregate runs only when the
+    prefix comes back full: one Spark job for an input that fits.
     """
     prices = PRICE_PER_M_TOKENS.get(model)
     if prices is None:
         raise ValueError(f"no price entry for model {model!r}")
-    total_rows = df.count()
-    if total_rows == 0:
-        return {"rows": 0, "input_tokens": 0, "output_tokens": 0, "cost": 0.0, "sampled_rows": 0}
-
     # sample enough rows to cover the budget assuming ~CHARS_PER_TOKEN
     # chars/token and a conservative 256-token row guess, min 100 rows
     guess_rows = max(100, sample_token_budget // 256)
@@ -59,7 +57,10 @@ def estimate_cost(
         F.sum("__tokens").alias("tok"), F.count(F.lit(1)).alias("n")
     ).first()
     sampled_rows, sampled_tokens = int(agg["n"]), int(agg["tok"] or 0)
-    per_row = sampled_tokens / sampled_rows if sampled_rows else 0.0
+    if sampled_rows == 0:
+        return {"rows": 0, "input_tokens": 0, "output_tokens": 0, "cost": 0.0, "sampled_rows": 0}
+    total_rows = df.count() if sampled_rows == guess_rows else sampled_rows
+    per_row = sampled_tokens / sampled_rows
     input_tokens = int(per_row * total_rows)
     output_tokens = output_tokens_per_row * total_rows
     cost = (

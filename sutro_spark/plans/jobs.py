@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sutro_spark.operators.results import cache_path
+from sutro_spark.sources.ingest import local_frame
 
 MAX_NAME_LEN = 45  # sdk.py:38
 MAX_DESCRIPTION_LEN = 512  # sdk.py:39
@@ -265,8 +266,8 @@ class JobRegistry:
                 j.input_tokens,
                 j.output_tokens,
                 float(j.cost_estimate),
-                j.datetime_created.replace(tzinfo=None),
-                j.datetime_completed.replace(tzinfo=None) if j.datetime_completed else None,
+                j.datetime_created,
+                j.datetime_completed,
             )
             for j in self.jobs.values()
         ]
@@ -275,7 +276,7 @@ class JobRegistry:
             " rows_total long, rows_completed long, input_tokens long, output_tokens long,"
             " cost_estimate double, datetime_created timestamp, datetime_completed timestamp"
         )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def results_path(self, job_id: str) -> str:
         """Where the job's parquet results live: fixed at submit for a

@@ -130,6 +130,9 @@ class SutroSpark:
             raise ValueError("id_column is only supported for HTTP(S) download URL inputs.")
         df = prepare_input_data(self.spark, data, column if isinstance(column, str) else None)
         schema_dict = normalize_output_schema(output_schema) if output_schema else None
+        if dry_run:
+            # the estimate reads only the input: no plan to build
+            return self.estimate_cost(df, column or "prompt", model=model)
         if stay_attached is None:
             stay_attached = job_priority == 0  # sdk.py:512-514
         out = llm_transform(
@@ -148,8 +151,6 @@ class SutroSpark:
             # sdk.py:1251-1276)
             keep_prompt=True,
         )
-        if dry_run:
-            return self.estimate_cost(df, column or "prompt", model=model)
         if schema_dict is not None:
             out = tag_output_schema(out, schema_dict)
         job_id = self.registry.submit(

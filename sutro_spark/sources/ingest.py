@@ -6,6 +6,15 @@ CSV/Parquet/TXT path; everything becomes a table whose rows are processed
 in input order, and results are re-attached *positionally*
 (sdk.py:1322-1334).
 
+In-memory inputs (lists, records, pandas frames) and the tables the
+job path builds from Python rows (row-id offsets, ``list_jobs``, Elo
+ratings) enter Spark one way: through Arrow (:func:`local_frame`).
+Inputs below ``spark.sql.execution.arrow.localRelationThreshold``
+(48 MB by default) become a ``LocalRelation`` whose rows live in the
+driver's plan; larger ones become an RDD of Arrow batches. Either way
+no Python worker unpickles rows on a scan, which is what a per-request
+prototyping call waits on.
+
 Spark has no implicit row order, so the engine's design rule is: **every
 source mints an explicit ``__row_id`` column** and every order-sensitive
 operator (positional join-back, final sort) keys on it. Two minting
@@ -28,8 +37,42 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 ROW_ID = "__row_id"
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str | None = None
+) -> DataFrame:
+    """Driver-side rows — tuples in schema order, or dicts keyed by
+    column — as one Arrow table: a ``LocalRelation`` in the driver's
+    plan below ``spark.sql.execution.arrow.localRelationThreshold``, an
+    RDD of Arrow batches above it, never a pickled RDD re-serialized
+    through a Python worker on every scan. Empty and non-empty inputs
+    take the same route, whatever the session's Arrow confs say.
+
+    Without ``schema`` the types come from Spark's own list inference
+    (``_inferSchemaFromList``), so each column gets the type
+    ``createDataFrame(rows)`` would give it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows, names=None)
+    elif isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    if rows and isinstance(rows[0], dict):
+        columns = [[r.get(n) for r in rows] for n in names]
+    else:
+        columns = [[r[i] for r in rows] for i in range(len(names))]
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFrame:
@@ -108,7 +151,7 @@ def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFra
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    off_df = spark.createDataFrame(offsets, "__pid int, __offset long")
+    off_df = local_frame(spark, offsets, "__pid int, __offset long")
     return (
         local.join(F.broadcast(off_df), "__pid")
         .withColumn(ROW_ID, F.col("__offset") + F.col("__local") - 1)
@@ -118,14 +161,12 @@ def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFra
 
 # --- S1: list-of-prompts source (common.py:126-127) -----------------------
 def from_list(spark: SparkSession, prompts: Iterable[str], column: str = "prompt") -> DataFrame:
-    rows = [(i, p) for i, p in enumerate(prompts)]
-    return spark.createDataFrame(rows, f"{ROW_ID} long, {column} string")
+    return local_frame(spark, list(enumerate(prompts)), f"{ROW_ID} long, {column} string")
 
 
 # --- S2: list-of-records source (sdk.py:701-702) --------------------------
 def from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
-    df = spark.createDataFrame([{ROW_ID: i, **r} for i, r in enumerate(records)])
-    return df
+    return local_frame(spark, [{ROW_ID: i, **r} for i, r in enumerate(records)])
 
 
 # --- S3: pandas DataFrame source (common.py:128-134) ----------------------

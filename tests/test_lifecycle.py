@@ -156,6 +156,55 @@ def test_cost_estimate_prefix_sample(spark, documents):
     assert est["input_tokens"] > 0 and est["cost"] > 0
 
 
+@pytest.mark.parametrize("n", [99, 100, 101])
+def test_cost_estimate_counts_only_a_full_prefix(spark, monkeypatch, n):
+    # sample_token_budget=1000 → a 100-row prefix: inputs shorter than,
+    # exactly as long as and longer than it give the dict of the
+    # count-first formula, and only a full prefix runs the count
+    import math
+
+    from sutro_spark.sources.ingest import from_list
+
+    prompts = [f"prompt {i} " + "x" * (i % 13) for i in range(n)]
+    df = from_list(spark, prompts)
+    counts = []
+    real_count = type(df).count
+    monkeypatch.setattr(type(df), "count", lambda self: counts.append(1) or real_count(self))
+    est = estimate_cost(df, "prompt", model="stub-echo", sample_token_budget=1000)
+    sample = prompts[:100]
+    per_row = sum(math.ceil(len(p) / 4) for p in sample) / len(sample)
+    input_tokens = int(per_row * n)
+    output_tokens = 128 * n
+    assert est == {
+        "rows": n,
+        "input_tokens": input_tokens,
+        "output_tokens": output_tokens,
+        "cost": round(input_tokens / 1e6 * 0.10 + output_tokens / 1e6 * 0.40, 6),
+        "sampled_rows": len(sample),
+    }
+    assert len(counts) == (0 if n < 100 else 1)
+
+
+def test_cost_estimate_empty_input(spark, documents):
+    est = estimate_cost(documents.limit(0), "text")
+    assert est == {"rows": 0, "input_tokens": 0, "output_tokens": 0, "cost": 0.0,
+                   "sampled_rows": 0}
+
+
+def test_dry_run_builds_no_transform_plan(spark, monkeypatch):
+    import sutro_spark.sdk as sdk
+
+    def no_plan(*a, **kw):
+        raise AssertionError("dry run built the llm_transform plan")
+
+    so = sdk.SutroSpark(spark)
+    prompts = [f"p{i}" for i in range(30)]
+    expected = so.estimate_cost(prompts, "prompt")
+    monkeypatch.setattr(sdk, "llm_transform", no_plan)
+    assert so.infer(prompts, dry_run=True) == expected
+    assert so.registry.jobs == {}
+
+
 def test_traces_roundtrip(spark, documents):
     docs = documents.limit(10)
     traces = create_traces(docs, "job-t1", "text")

@@ -846,6 +846,21 @@ def test_mad_outliers_singleton_never_flagged(spark):
     assert mad_outliers(df, "v", "grp", "id").count() == 0
 
 
+def test_mad_outliers_ignores_null_values(spark):
+    # percentile() skips null cents, so the group size must too: null
+    # rows change nothing, and a value plus a null is a singleton
+    from sutro_spark.functions.stats import mad_outliers
+
+    rows = [(1, "g", 1.0), (2, "g", 2.0), (3, "g", 3.0), (4, "g", 40.0)]
+    nulls = [(10, "g", None), (11, "g", None), (12, "g", None), (13, "lone", 5.0),
+             (14, "lone", None), (15, "void", None), (16, "void", None)]
+    schema = "id long, grp string, v double"
+    clean = mad_outliers(spark.createDataFrame(rows, schema), "v", "grp", "id").collect()
+    out = mad_outliers(spark.createDataFrame(rows + nulls, schema), "v", "grp", "id").collect()
+    assert sorted(out) == sorted(clean)
+    assert [r["id"] for r in out] == [4] and out[0]["med2"] == 500
+
+
 def test_mad_outliers_matches_bruteforce_medians(spark):
     # r17: med2/mad_med2 now come from 2*percentile(col, 0.5) instead
     # of two window row_number sorts; this pins the doubled-median

@@ -160,6 +160,27 @@ def test_pairwise_counts_no_cartesian_self_join(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_pairwise_counts_one_aggregate_no_full_outer_join(spark):
+    # wins and ties are conditional counts of ONE grouped aggregate over
+    # the ballot self-join: a single (winner, loser) grouping, and no
+    # full outer join of a wins table with a ties table
+    from sutro_spark.operators.elo import pairwise_counts
+
+    ballots = spark.createDataFrame(
+        [(["A", "B|C"],), (["B", "A"],)], "ranking array<string>"
+    )
+    df = pairwise_counts(ballots, "ranking")
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    aggregates = [
+        ln for ln in logical.splitlines() if ln.lstrip(" :+-|").startswith("Aggregate ")
+    ]
+    assert len(aggregates) == 1
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    assert "FullOuter" not in physical
+    # partial + final halves of the one aggregate, nothing more
+    assert physical.count("HashAggregate(keys=") == 2
+
+
 def test_winnow_dedup_no_cartesian(spark):
     plan = _plan(spark, "winnow_dedup")
     assert "CartesianProduct" not in plan
