@@ -2600,9 +2600,7 @@ def q_ivfpq_rescore_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall trilogy, part 6 — the honesty number for the rescore knob:
     # rescored residual IVFADC top-3 vs exact integer L2 top-3. Compare
     # against ivfpq_recall (same routing, no rescore) to read off what
-    # the exact re-rank buys back of the PQ quantization loss; the
-    # production-scale sweep point lives in bench.py ann_probes
-    # (nprobe_16_rescore_50 vs nprobe_16).
+    # the exact re-rank buys back of the PQ quantization loss.
     from sutro_spark.operators.metrics import candidate_recall
     from sutro_spark.operators.pq import exact_l2_topk, ivfpq_residual_topk
 

@@ -12,7 +12,9 @@ operators:
 - a batched row-wise model transform ``llm_transform`` built on
   ``mapInPandas`` with a pluggable inference backend (reference:
   sdk.py:465-537 ships rows to api.sutro.sh; here the backend is an
-  executor-side callable — deterministic stub by default),
+  object the plan carries by value to the executors — the
+  deterministic ``StubBackend`` by default, ``HttpBackend`` for a
+  sutro-style service),
 - structured-output JSON unpacking (reference: sdk.py:1278-1320),
 - the classify / embed / score / rank templates (reference: templates/*),
 - ballots → pairwise counts → Bradley-Terry/Elo (reference:
@@ -39,7 +41,7 @@ from sutro_spark.sources.ingest import (
     with_row_id,
 )
 from sutro_spark.functions.prompt import concat_prompt, labeled_concat, normalize_output_schema
-from sutro_spark.operators.backends import StubBackend, get_backend, register_backend
+from sutro_spark.operators.backends import HttpBackend, StubBackend
 from sutro_spark.operators.transform import llm_transform
 from sutro_spark.operators.unpack import unpack_json_outputs
 from sutro_spark.operators.templates import classify, embed, rank, score
@@ -57,8 +59,7 @@ __all__ = [
     "labeled_concat",
     "normalize_output_schema",
     "StubBackend",
-    "get_backend",
-    "register_backend",
+    "HttpBackend",
     "llm_transform",
     "unpack_json_outputs",
     "classify",

@@ -1,11 +1,10 @@
-from sutro_spark.operators.backends import StubBackend, get_backend, register_backend
+from sutro_spark.operators.backends import HttpBackend, StubBackend
 from sutro_spark.operators.transform import llm_transform
 from sutro_spark.operators.unpack import unpack_json_outputs
 
 __all__ = [
     "StubBackend",
-    "get_backend",
-    "register_backend",
+    "HttpBackend",
     "llm_transform",
     "unpack_json_outputs",
 ]

@@ -2,13 +2,16 @@
 
 The reference ships prompts over HTTPS to api.sutro.sh
 (/root/reference/sutro/sdk.py:216-254) and the server returns outputs
-positionally aligned. Here a backend is an executor-side callable invoked
-from inside ``mapInPandas`` with an Arrow batch of prompts.
+positionally aligned. Here a backend is an object passed to
+``llm_transform`` and captured in its ``mapInPandas`` closure: Spark
+pickles it with the task and the executor calls it with an Arrow batch
+of prompts.
 
 Backends must be:
 
-- **picklable by name** — executors resolve backends from a module-level
-  registry so no live session objects are captured in closures;
+- **picklable by value** — the closure carries the backend itself, so
+  it holds configuration (URLs, keys, a transport), never live session
+  objects;
 - **idempotent** — Spark task retries mean a batch may run twice
   (reference analog: submissions are never retried, sdk.py:247-252;
   our answer is determinism keyed on the prompt itself);
@@ -23,13 +26,14 @@ checkable against the DuckDB oracle (SURVEY.md §5).
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
-from typing import Protocol
+from dataclasses import dataclass
+from typing import Protocol, runtime_checkable
 
 import numpy as np
 import pandas as pd
 
 
+@runtime_checkable
 class Backend(Protocol):
     def generate(
         self,
@@ -45,7 +49,6 @@ class Backend(Protocol):
     def embed(self, prompts: pd.Series, *, model: str, dim: int = 64) -> pd.Series: ...
 
 
-@dataclass
 class StubBackend:
     """Deterministic stand-in for the remote inference service.
 
@@ -69,8 +72,6 @@ class StubBackend:
 
     len() counts characters, matching SQL ``length()`` on UTF-8 text.
     """
-
-    name: str = "stub"
 
     def generate(
         self,
@@ -370,7 +371,6 @@ class HttpBackend:
             )
         self.max_concurrency = max_concurrency
         self.sub_batch_size = sub_batch_size
-        self.name = "http"
 
     # -- wire steps, each independently testable ------------------------
     def build_payload(
@@ -555,14 +555,5 @@ class HttpBackend:
         return res["outputs"]
 
 
-_REGISTRY: dict[str, Backend] = {"stub": StubBackend()}
-
-
-def register_backend(name: str, backend: Backend) -> None:
-    _REGISTRY[name] = backend
-
-
-def get_backend(name: str = "stub") -> Backend:
-    if name not in _REGISTRY:
-        raise ValueError(f"unknown backend {name!r}; registered: {sorted(_REGISTRY)}")
-    return _REGISTRY[name]
+#: The default backend of every transform, template and facade.
+STUB = StubBackend()

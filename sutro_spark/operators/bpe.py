@@ -95,7 +95,9 @@ def _symbols(ws) -> F.Column:
 
 def _train(df: DataFrame, text_column: str, rounds: int):
     """Shared trainer: returns (list of (round, lhs, rhs, weight)
-    tuples, the final segmented vocabulary DF (w, weight, ws)).
+    tuples, the final segmented vocabulary DF (w, weight, ws), the live
+    checkpoint that DF reads — None when the Python route already
+    released it).
 
     Eager by design: each round runs one TakeOrdered job over the
     checkpointed distinct-word table and collects the single winning
@@ -125,8 +127,6 @@ def _train(df: DataFrame, text_column: str, rounds: int):
     # round -> zero; bpe_encode train 2.9 s -> see OPTIMIZATION_r17.md.
     if cur.count() <= _DRIVER_VOCAB_ROWS:
         vocab = [(r["w"], int(r["weight"]), r["ws"]) for r in cur.collect()]
-        from sutro_spark.session import release_local_checkpoint
-
         release_local_checkpoint(cur)  # Python owns the state now
         merges = []
         for r in range(1, rounds + 1):
@@ -147,7 +147,7 @@ def _train(df: DataFrame, text_column: str, rounds: int):
         cur_df = df.sparkSession.createDataFrame(
             vocab, "w string, weight long, ws string"
         )
-        return merges, cur_df
+        return merges, cur_df, None
     merges = []
     prev_ckpt = cur
     for r in range(1, rounds + 1):
@@ -190,7 +190,7 @@ def _train(df: DataFrame, text_column: str, rounds: int):
             # the superseded checkpoint's blocks are unreachable now
             release_local_checkpoint(prev_ckpt)
             prev_ckpt = cur
-    return merges, cur
+    return merges, cur, prev_ckpt
 
 
 def bpe_merges(
@@ -207,15 +207,12 @@ def bpe_merges(
     return fewer than ``rounds`` rows when the vocabulary is fully
     merged early (zero rows for an empty/whitespace corpus).
     """
-    merges, cur = _train(df, text_column, rounds)
-    # r17 lifecycle: the merge table is the only output here — when the
-    # training tail left ``cur`` as a checkpointed frame (distributed
-    # path at a rotation boundary), its blocks can never be read again;
-    # best-effort no-op otherwise (the Python path already released the
-    # word-table checkpoint inside _train).
-    from sutro_spark.session import release_local_checkpoint
-
-    release_local_checkpoint(cur)
+    merges, _, ckpt = _train(df, text_column, rounds)
+    # the merge table is the only output here: on the distributed route
+    # the word-table or last-rotation checkpoint can never be read
+    # again, so free its blocks (the Python route released it already)
+    if ckpt is not None:
+        release_local_checkpoint(ckpt)
     return df.sparkSession.createDataFrame(
         merges, "round long, lhs string, rhs string, weight long"
     )
@@ -232,7 +229,7 @@ def bpe_segment(
     distinct word (join back on the word to tokenize a corpus; the
     vocabulary is many orders smaller than the corpus, so the apply
     step broadcasts at any realistic scale)."""
-    _, cur = _train(df, text_column, rounds)
+    _, cur, _ = _train(df, text_column, rounds)
     return cur.select("w", "weight", _symbols("ws").alias("subwords"))
 
 

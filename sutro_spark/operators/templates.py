@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sutro_spark.functions.prompt import labeled_concat
+from sutro_spark.operators.backends import STUB, Backend
 from sutro_spark.operators.transform import embed_transform, llm_transform
 from sutro_spark.operators.unpack import decode_ranking, strip_scratchpad
 
@@ -47,7 +48,7 @@ def classify(
     model: str = "stub-echo",
     output_column: str = "classification",
     keep_scratchpad: bool = False,
-    backend: str = "stub",
+    backend: Backend = STUB,
     include_logprobs: bool = False,
 ) -> DataFrame:
     """U3 — rubric system prompt + constrained {scratchpad,
@@ -94,7 +95,7 @@ def score(
     score_range: tuple[int, int] = (1, 10),
     model: str = "stub-echo",
     score_column: str = "score",
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U4 — LLM judge: criteria → judge system prompt, integer score in
     range, score column joined back onto the input
@@ -139,7 +140,7 @@ def rank(
     model: str = "stub-echo",
     ranking_column: str = "ranking",
     run_elo: bool = False,
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U5 — pairwise/listwise judge: labeled concat of the option columns
     (P3, null option ⇒ null prompt ⇒ null ranking), array-of-labels
@@ -180,7 +181,7 @@ def embed(
     model: str = "stub-embed",
     output_column: str = "embedding",
     dim: int = 8,
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U2 wrapper matching the reference template
     (/root/reference/sutro/templates/embed.py:9-53)."""
@@ -196,7 +197,7 @@ def infer_per_model(
     *,
     names: list[str] | None = None,
     output_column: str = "outputs",
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U8 — the same dataset fanned out across N models
     (reference: sdk.py:745-851 submits N sequential detached jobs).
@@ -230,7 +231,7 @@ def run_function(
     record: dict,
     function_name: str,
     *,
-    backend: str = "stub",
+    backend: Backend = STUB,
     traced: bool = False,
 ) -> dict:
     """U6 — online single-record function call
@@ -245,13 +246,11 @@ def run_function(
     import json as _json
     import time as _time
 
-    from sutro_spark.operators.backends import get_backend
-
     import pandas as pd
 
     prompt = _json.dumps(record, ensure_ascii=False)
     t0 = _time.time()
-    out = get_backend(backend).generate(pd.Series([prompt]), model=function_name)
+    out = backend.generate(pd.Series([prompt]), model=function_name)
     response = out["outputs"].iloc[0]
     result = {
         "response": response,
@@ -275,7 +274,7 @@ def batch_run_function(
     function_name: str,
     *,
     output_column: str = "outputs",
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U7 — table rows become JSON records shipped to a named function
     (reference: sdk.py:617-743 converts via to_dict(orient="records")

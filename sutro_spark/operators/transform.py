@@ -12,10 +12,12 @@ no shuffle, no join, no ordering assumption. The backend is called once
 per Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows),
 which is the Spark analog of the reference's server-side batching.
 
+The backend is a value: the caller passes the object, the
+``mapInPandas`` closure captures it, and Spark pickles it with every
+task, so the Python workers run the backend exactly as the driver
+configured it (an ``HttpBackend`` keeps its URL, key and transport).
+
 Scale notes (100 TB):
-- carry-through mode moves every column through Arrow. For *wide* inputs
-  use ``slim=True``: only (__row_id, prompt) cross the Python boundary and
-  the outputs are equi-joined back on ``__row_id`` (one shuffle, narrow).
 - the operator is embarrassingly parallel: throughput scales linearly
   with executors; no state, no skew (batches are uniform row slices).
 - task retries re-run whole batches; backends must be deterministic /
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sutro_spark.functions.prompt import concat_prompt
-from sutro_spark.sources.ingest import ROW_ID, with_row_id
+from sutro_spark.operators.backends import STUB, Backend
 
 _PROMPT = "__prompt"
 
@@ -59,8 +61,7 @@ def llm_transform(
     random_seed_per_input: bool = False,
     truncate_chars: int | None = None,
     include_logprobs: bool = False,
-    backend: str = "stub",
-    slim: bool = False,
+    backend: Backend = STUB,
     keep_prompt: bool = False,
     progress_accumulator=None,
 ) -> DataFrame:
@@ -71,72 +72,22 @@ def llm_transform(
     decoding), ``sampling_params``, ``random_seed_per_input``, and
     ``truncate_chars`` standing in for the server-side ``truncate_rows``
     (a plain projection: fit the prompt to a context budget *before* the
-    expensive call).
+    expensive call). ``backend`` is called once per Arrow batch on the
+    executors.
     """
     if output_column in df.columns:
         raise ValueError(f"output column {output_column!r} already exists in the input")
     src = _prompt_column(df, column)
     if truncate_chars is not None:
         src = src.withColumn(_PROMPT, F.substring(F.col(_PROMPT), 1, truncate_chars))
-
-    if slim:
-        src = with_row_id(src)
-        narrow = src.select(ROW_ID, _PROMPT)
-        transformed = _apply_backend(
-            narrow,
-            model=model,
-            output_column=output_column,
-            system_prompt=system_prompt,
-            output_schema=output_schema,
-            sampling_params=sampling_params,
-            random_seed_per_input=random_seed_per_input,
-            include_logprobs=include_logprobs,
-            backend=backend,
-            progress_accumulator=progress_accumulator,
-        ).drop(_PROMPT)
-        left = src if keep_prompt else src.drop(_PROMPT)
-        return left.join(transformed, on=ROW_ID, how="inner")
-
-    out = _apply_backend(
-        src,
-        model=model,
-        output_column=output_column,
-        system_prompt=system_prompt,
-        output_schema=output_schema,
-        sampling_params=sampling_params,
-        random_seed_per_input=random_seed_per_input,
-        include_logprobs=include_logprobs,
-        backend=backend,
-        progress_accumulator=progress_accumulator,
-    )
-    return out if keep_prompt else out.drop(_PROMPT)
-
-
-def _apply_backend(
-    src: DataFrame,
-    *,
-    model: str,
-    output_column: str,
-    system_prompt: str,
-    output_schema: dict | None,
-    sampling_params: dict | None,
-    random_seed_per_input: bool,
-    include_logprobs: bool,
-    backend: str,
-    progress_accumulator=None,
-) -> DataFrame:
     out_fields = list(src.schema.fields) + [T.StructField(output_column, T.StringType())]
     if include_logprobs:
         out_fields.append(T.StructField("cumulative_logprobs", T.DoubleType()))
     out_schema = T.StructType(out_fields)
-    backend_name = backend
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sutro_spark.operators.backends import get_backend
-
-        b = get_backend(backend_name)
         for pdf in batches:
-            res = b.generate(
+            res = backend.generate(
                 pdf[_PROMPT],
                 model=model,
                 system_prompt=system_prompt,
@@ -155,7 +106,8 @@ def _apply_backend(
                 progress_accumulator.add(len(pdf))
             yield pdf
 
-    return src.mapInPandas(run, schema=out_schema)
+    out = src.mapInPandas(run, schema=out_schema)
+    return out if keep_prompt else out.drop(_PROMPT)
 
 
 def embed_transform(
@@ -165,7 +117,7 @@ def embed_transform(
     model: str = "stub-embed",
     output_column: str = "embedding",
     dim: int = 8,
-    backend: str = "stub",
+    backend: Backend = STUB,
 ) -> DataFrame:
     """U2 — per-row embedding (reference: templates/embed.py:9-53).
 
@@ -177,14 +129,10 @@ def embed_transform(
     out_schema = T.StructType(
         list(src.schema.fields) + [T.StructField(output_column, T.ArrayType(T.DoubleType()))]
     )
-    backend_name = backend
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sutro_spark.operators.backends import get_backend
-
-        b = get_backend(backend_name)
         for pdf in batches:
-            vecs = b.embed(pdf[_PROMPT], model=model, dim=dim)
+            vecs = backend.embed(pdf[_PROMPT], model=model, dim=dim)
             pdf = pdf.copy()
             pdf[output_column] = [list(v) for v in vecs]
             yield pdf

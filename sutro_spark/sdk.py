@@ -11,8 +11,10 @@ Differences by design (Spark-first, SURVEY.md §0):
 - jobs execute on the local cluster via the JobRegistry instead of a
   remote API; job ids, statuses, polling, cancellation, quotas, and the
   parquet result cache keep the reference's semantics.
-- the model is served by a pluggable backend; the default deterministic
-  stub makes everything reproducible offline.
+- the model is served by a pluggable backend object (``StubBackend``,
+  ``HttpBackend``, or any ``Backend``); every plan carries it by value
+  to the executors. The default deterministic stub makes everything
+  reproducible offline.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sutro_spark.functions.prompt import normalize_output_schema
 from sutro_spark.operators import templates as _templates
+from sutro_spark.operators.backends import STUB, Backend
 from sutro_spark.operators.results import (
     output_schema_of,
     read_result_cache,
@@ -59,17 +62,23 @@ class SutroSpark:
 
     >>> so = SutroSpark(spark)
     >>> results = so.infer(df, column="text", output_schema=Schema)
+    >>> remote = SutroSpark(spark, backend=HttpBackend(url, api_key))
     """
 
     def __init__(
         self,
         spark: SparkSession | None = None,
-        backend: str = "stub",
+        backend: Backend = STUB,
         api_key: str | None = None,
         base_url: str | None = None,
     ):
         from sutro_spark.session import get_spark
 
+        if not isinstance(backend, Backend):
+            raise TypeError(
+                "backend must be a Backend object such as StubBackend() or "
+                f"HttpBackend(url, key), not {type(backend).__name__}"
+            )
         self.spark = spark or get_spark()
         self.backend = backend
         self.registry = JobRegistry(self.spark)

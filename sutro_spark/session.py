@@ -89,6 +89,12 @@ def get_spark(app_name: str = "sutro_spark", cpus: int | None = None) -> SparkSe
         # error messages with user call sites; plans and results are
         # identical. Driver-side, data-size-independent.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # reliable checkpoints (SUTRO_SPARK_CHECKPOINT_DIR, see barrier)
+        # are files: without this the files of every superseded barrier
+        # stay on disk until someone deletes the directory. With it, the
+        # ContextCleaner deletes them once their RDD is garbage
+        # collected. A static conf, so it must be set here.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -131,9 +131,9 @@ def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFra
     # and unpersisting would re-sample new range boundaries on the
     # final action (silently wrong ids). Callers that mint row ids
     # repeatedly in one session MUST call spark.catalog.clearCache()
-    # between queries (bench.py does, per run) or accept one pinned
-    # table per mint until session end; unlike localCheckpoint blocks,
-    # this persist IS cleared by clearCache.
+    # between queries or accept one pinned table per mint until
+    # session end; unlike localCheckpoint blocks, this persist IS
+    # cleared by clearCache.
     ckdir = os.environ.get("SUTRO_SPARK_CHECKPOINT_DIR")
     if ckdir:
         from sutro_spark.session import barrier

@@ -272,3 +272,19 @@ def test_python_trainer_route_matches_distributed(spark, monkeypatch):
     }
     assert fast_m == slow_m
     assert fast_seg == slow_seg
+
+
+def test_bpe_merges_releases_its_checkpoint(spark, monkeypatch):
+    # the distributed route checkpoints the word table; bpe_merges
+    # returns only the merge table, so that checkpoint must not stay
+    # pinned after the call (rounds=3 ends between rotations)
+    from sutro_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", 0)
+    assert 3 % bpe._CHECKPOINT_EVERY != 0
+    df = _corpus(spark, "low lower lowest low low", "newer newest new low")
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        assert bpe.bpe_merges(df, rounds=3).count() == 3
+    assert jsc.getPersistentRDDs().size() == before

@@ -131,6 +131,13 @@ def test_driver_memory_sizing(tmp_path, monkeypatch):
     assert driver_memory(str(meminfo)) == "1g"  # the override wins
 
 
+def test_reliable_checkpoints_are_cleaned(spark):
+    # superseded SUTRO_SPARK_CHECKPOINT_DIR checkpoints are deleted when
+    # their RDD is garbage collected, not kept until the session ends
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_quota_check(spark):
     reg = JobRegistry(spark)
     with pytest.raises(ValueError, match="quota"):

@@ -1,10 +1,9 @@
 """Scale-layout utilities: bucketed joins without shuffle, partition
-pruning, skew salting, slim-mode transform equivalence."""
+pruning, skew salting."""
 
 from pyspark.sql import functions as F
 
 from sutro_spark.functions.skew import salted_join, two_phase_agg
-from sutro_spark.operators.transform import llm_transform
 from sutro_spark.sources.sinks import (
     bucketed_join_ready,
     plan_has_no_shuffle,
@@ -75,13 +74,6 @@ def test_two_phase_agg_matches_direct(spark, sf_dir):
         for r in two_phase_agg(li, "l_returnflag", "l_quantity", buckets=4).collect()
     }
     assert direct == two
-
-
-def test_llm_transform_slim_equals_carry(spark, documents):
-    docs = documents.limit(50)
-    carry = llm_transform(docs, "text").select("doc_id", "outputs")
-    slim = llm_transform(docs, "text", slim=True).select("doc_id", "outputs")
-    assert {tuple(r) for r in carry.collect()} == {tuple(r) for r in slim.collect()}
 
 
 def test_zorder_key_known_morton_values(spark):
