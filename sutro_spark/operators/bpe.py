@@ -73,6 +73,12 @@ _CHECKPOINT_EVERY = 20
 #: a few MB, two orders under the driver-result limit.
 _DRIVER_VOCAB_ROWS = 1 << 16
 
+#: The row gate alone does not bound the collected bytes: ``ws`` wraps
+#: every character in two markers, so a vocabulary of a few long distinct
+#: tokens (URLs, base64, DNA) is large in few rows. The Python route also
+#: needs the wrapped words to total at most this many UTF-8 bytes.
+_DRIVER_VOCAB_BYTES = 1 << 24
+
 
 def _wrapped_chars(col) -> F.Column:
     """word → '\\x01c1\\x02\\x01c2\\x02...' (one wrapped symbol per char)."""
@@ -125,7 +131,11 @@ def _train(df: DataFrame, text_column: str, rounds: int):
     # bpe [Q] oracles replay training and stay strict-green. Measured
     # at sf0.1 (31-word vocab, rounds=4): one TakeOrdered job per
     # round -> zero; bpe_encode train 2.9 s -> see OPTIMIZATION_r17.md.
-    if cur.count() <= _DRIVER_VOCAB_ROWS:
+    size = cur.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.sum(F.octet_length("ws")), F.lit(0)).alias("bytes"),
+    ).first()
+    if size["rows"] <= _DRIVER_VOCAB_ROWS and size["bytes"] <= _DRIVER_VOCAB_BYTES:
         vocab = [(r["w"], int(r["weight"]), r["ws"]) for r in cur.collect()]
         release_local_checkpoint(cur)  # Python owns the state now
         merges = []

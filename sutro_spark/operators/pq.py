@@ -31,6 +31,8 @@ corpus side prunes before ADC.
 from __future__ import annotations
 
 from sutro_spark.session import barrier as _barrier
+from sutro_spark.session import release_local_checkpoint
+from sutro_spark.sources.ingest import local_frame
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -522,7 +524,7 @@ def ivfpq_residual_topk(
     """
     if rescore_k is not None and rescore_k < k:
         raise ValueError(f"rescore_k {rescore_k} must be >= k {k}")
-    qdt, cand, codes = _ivfpq_residual_parts(
+    qdt, cand, codes, _ = _ivfpq_residual_parts(
         df, queries, coarse_k=coarse_k, coarse_iters=coarse_iters,
         nprobe=nprobe, m=m, n_codes=n_codes, id_column=id_column,
         vector_column=vector_column, dim=dim, scale=scale, offset=offset,
@@ -563,7 +565,9 @@ def _ivfpq_residual_parts(
     codes = (neighbor_id, sub, code) PQ codes. Shared by the plain
     top-k and the bound-pruned variant; ADC itself is :func:`_adc` so
     the pruned variant can run it over a candidate SUBSET — keeping
-    the saved work out of the executed plan, not just the output."""
+    the saved work out of the executed plan, not just the output.
+    The fourth element is the residual-corpus checkpoint ``cand``
+    reads, for a caller that runs its final action itself to release."""
     from sutro_spark.operators.kmeans import kmeans
 
     if dim % m != 0:
@@ -646,7 +650,7 @@ def _ivfpq_residual_parts(
         )
         .where(F.col("neighbor_id") != F.col("query_id"))
     )
-    return qdt, cand, codes
+    return qdt, cand, codes, rq
 
 
 def _adc(cand: DataFrame, codes: DataFrame, qdt: DataFrame) -> DataFrame:
@@ -745,7 +749,7 @@ def ivfpq_pruned_topk(
     over survivors — pruned buckets' candidates never reach a codes
     join (plan-shape pytest asserts the kept-side join feeds the ADC).
     Use :func:`ivfpq_prune_stats` to measure the reduction."""
-    qdt, cand, codes = _ivfpq_residual_parts(
+    qdt, cand, codes, _ = _ivfpq_residual_parts(
         df, queries, coarse_k=coarse_k, coarse_iters=coarse_iters,
         nprobe=nprobe, m=m, n_codes=n_codes, id_column=id_column,
         vector_column=vector_column, dim=dim, scale=scale, offset=offset,
@@ -790,8 +794,11 @@ def ivfpq_prune_stats(
     candidates the ADC stage would process without vs with the bucket
     bound, over the same routing. cand_pruned <= cand_full always;
     equality of the RESULTS at the reduced cost is the pruning theorem
-    (pytest + the pruned/unpruned [Q] pair share one oracle chain)."""
-    qdt, cand, codes = _ivfpq_residual_parts(
+    (pytest + the pruned/unpruned [Q] pair share one oracle chain).
+
+    Eager: the row is computed here and returned as a local relation,
+    so the call leaves no checkpoint pinned."""
+    qdt, cand, codes, resid = _ivfpq_residual_parts(
         df, queries, coarse_k=coarse_k, coarse_iters=coarse_iters,
         nprobe=nprobe, m=m, n_codes=n_codes, id_column=id_column,
         vector_column=vector_column, dim=dim, scale=scale, offset=offset,
@@ -813,7 +820,14 @@ def ivfpq_prune_stats(
         F.count(F.lit(1)).cast("long").alias("cand_full"),
     )
     pruned = kept.agg(F.count(F.lit(1)).cast("long").alias("cand_pruned"))
-    return full.crossJoin(F.broadcast(pruned))
+    stats = full.crossJoin(F.broadcast(pruned))
+    # the final action: nothing reads the residual, qdt or codes
+    # checkpoints after it, so their blocks go now, not whenever the
+    # JVM next collects garbage (clearCache does not reach them)
+    row = stats.collect()[0]
+    for ckpt in (resid, qdt, codes):
+        release_local_checkpoint(ckpt)
+    return local_frame(df.sparkSession, [tuple(row)], stats.schema)
 
 
 # --- OPQ-lite: structured (Walsh–Hadamard) rotation before PQ -------------

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sutro_spark.sources.ingest import ROW_ID
 
@@ -176,14 +177,20 @@ def write_result_cache(df: DataFrame, job_id: str) -> str:
 
 
 def read_result_cache(
-    spark: SparkSession, job_id: str, expected_columns: list[str], path: str | None = None
+    spark: SparkSession,
+    job_id: str,
+    expected_columns: list[str],
+    path: str | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Reuse iff the cached columns ⊇ expected (sdk.py:1159-1172).
-    ``path`` overrides the job id's cache path."""
+    ``path`` overrides the job id's cache path; ``schema``, when known,
+    is the one the file was written with, which spares the one-task job
+    that infers it from a file footer."""
     path = path or cache_path(job_id)
     if not is_complete(path):
         return None
-    df = spark.read.parquet(path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if not set(expected_columns) <= set(df.columns):
         return None
     return df

@@ -14,8 +14,9 @@ action tagged with a job group so ``cancel`` maps to
 One materialization per job: the job's only action writes its plan to
 the parquet results cache (``cache_path(job_id)``, the reference's
 per-job parquet, sdk.py:1233), with the row count riding that write as
-an observed metric. The registry keeps the path, never a DataFrame, and
-every results fetch is a read of that file.
+an observed metric. The registry keeps the path and the schema written
+there, never a DataFrame, and every results fetch is a read of that file
+with that schema, so no fetch runs a job to infer it from the footer.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sutro_spark.operators.results import cache_path
 from sutro_spark.sources.ingest import local_frame
@@ -72,6 +74,7 @@ class Job:
     cost_estimate: float = 0.0
     failure_reason: str | None = None
     results_path: str | None = None  # the job's parquet results
+    schema: StructType | None = None  # the schema those results are written with
     datetime_created: datetime = field(
         default_factory=lambda: datetime.now(timezone.utc)
     )
@@ -138,6 +141,7 @@ class JobRegistry:
             priority=priority,
             rows_total=rows_total or 0,
             results_path=cache_path(job_id),
+            schema=df.schema,
         )
         with self._lock:
             self.jobs[job_id] = job
@@ -278,16 +282,20 @@ class JobRegistry:
         )
         return local_frame(self.spark, rows, schema)
 
-    def results_path(self, job_id: str) -> str:
-        """Where the job's parquet results live: fixed at submit for a
-        job this registry knows, else the cache path for its id."""
+    def results_file(self, job_id: str) -> tuple[str, StructType | None]:
+        """Where the job's parquet results live and the schema they are
+        written with, both fixed at submit for a job this registry knows;
+        for any other id, the cache path for it and no schema."""
         job = self.jobs.get(job_id)
-        return job.results_path if job is not None else cache_path(job_id)
+        if job is None:
+            return cache_path(job_id), None
+        return job.results_path, job.schema
 
     def get_job_results(self, job_id: str) -> DataFrame | None:
-        """The succeeded job's parquet results, read fresh (None for a
-        job that is unknown or did not succeed)."""
+        """The succeeded job's parquet results, read fresh with the
+        schema the job wrote (None for a job that is unknown or did not
+        succeed)."""
         job = self.jobs.get(job_id)
         if job is None or job.status is not JobStatus.SUCCEEDED:
             return None
-        return self.spark.read.parquet(job.results_path)
+        return self.spark.read.schema(job.schema).parquet(job.results_path)

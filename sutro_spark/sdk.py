@@ -330,7 +330,8 @@ class SutroSpark:
 
         # no server to refetch from: the job's file is the only copy, so
         # a missing optional column is tolerated below, not a miss
-        res = read_result_cache(self.spark, job_id, [], path=self.registry.results_path(job_id))
+        path, schema = self.registry.results_file(job_id)
+        res = read_result_cache(self.spark, job_id, [], path=path, schema=schema)
         # raw ``outputs``, or ``output_column`` in a cache written before
         # jobs stored the raw layout
         if res is None or not {"outputs", output_column} & set(res.columns):

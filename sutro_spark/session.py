@@ -50,6 +50,13 @@ def get_spark(app_name: str = "sutro_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # An in-memory input above 1 MiB of Arrow batches enters as an
+        # RDD of those batches, one partition per batch, which the tasks
+        # turn into rows in parallel. Under Spark's 48 MB default it
+        # would be a LocalRelation, turned into rows on one driver
+        # thread before any task starts. Driver-built tables (job lists,
+        # ratings, row-id offsets, 200-row prompt lists) stay local.
+        .config("spark.sql.execution.arrow.localRelationThreshold", str(1 << 20))
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config(

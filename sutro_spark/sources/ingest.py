@@ -8,12 +8,16 @@ in input order, and results are re-attached *positionally*
 
 In-memory inputs (lists, records, pandas frames) and the tables the
 job path builds from Python rows (row-id offsets, ``list_jobs``, Elo
-ratings) enter Spark one way: through Arrow (:func:`local_frame`).
-Inputs below ``spark.sql.execution.arrow.localRelationThreshold``
-(48 MB by default) become a ``LocalRelation`` whose rows live in the
-driver's plan; larger ones become an RDD of Arrow batches. Either way
-no Python worker unpickles rows on a scan, which is what a per-request
-prototyping call waits on.
+ratings) enter Spark one way: through Arrow (:func:`local_frame`,
+:func:`from_pandas`). Inputs below
+``spark.sql.execution.arrow.localRelationThreshold`` (1 MiB in
+:func:`~sutro_spark.session.get_spark`) become a ``LocalRelation`` whose
+rows live in the driver's plan; larger ones become an RDD of Arrow
+batches, one partition per batch. Either way the input has one
+partition per task slot (fewer only with fewer rows than slots), in
+row order, so a job runs one wave of tasks and writes one file per slot
+(:func:`_arrow_frame`), and no Python worker unpickles rows on a scan,
+which is what a per-request prototyping call waits on.
 
 Spark has no implicit row order, so the engine's design rule is: **every
 source mints an explicit ``__row_id`` column** and every order-sensitive
@@ -47,10 +51,12 @@ def local_frame(
 ) -> DataFrame:
     """Driver-side rows — tuples in schema order, or dicts keyed by
     column — as one Arrow table: a ``LocalRelation`` in the driver's
-    plan below ``spark.sql.execution.arrow.localRelationThreshold``, an
-    RDD of Arrow batches above it, never a pickled RDD re-serialized
-    through a Python worker on every scan. Empty and non-empty inputs
-    take the same route, whatever the session's Arrow confs say.
+    plan below ``spark.sql.execution.arrow.localRelationThreshold``
+    (1 MiB), an RDD of Arrow batches above it, one partition per task
+    slot either way (:func:`_arrow_frame`), never a pickled RDD
+    re-serialized through a Python worker on every scan. Empty and
+    non-empty inputs take the same route, whatever the session's Arrow
+    confs say.
 
     Without ``schema`` the types come from Spark's own list inference
     (``_inferSchemaFromList``), so each column gets the type
@@ -72,7 +78,36 @@ def local_frame(
     table = pa.table(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
     )
-    return spark.createDataFrame(table, schema)
+    return _arrow_frame(spark, table, schema)
+
+
+def _arrow_frame(spark: SparkSession, table, schema: StructType | None = None) -> DataFrame:
+    """``createDataFrame`` over an Arrow table cut into ``slots * k``
+    near-equal record batches, the fewest that keep each within
+    ``maxRecordsPerBatch``, then coalesced to one partition per slot.
+
+    Above the ``LocalRelation`` threshold Spark makes one partition per
+    record batch, so the cut sets the partitions: a 5k-row input gets
+    ``slots`` partitions, not one 10k-row batch on one slot, and a
+    100k-row input gets 25k rows per slot, not 10k-row batches in three
+    waves of tasks. The count comes from the driver's row count, not
+    from the plan. A ``coalesce`` without a shuffle joins ``k``
+    neighbouring batches, so ``__row_id`` order is unchanged. Below the
+    threshold the ``LocalRelation`` scan already has ``min(rows, slots)``
+    partitions and ``k`` is 1."""
+    import pyarrow as pa
+
+    n = table.num_rows
+    slots = spark.sparkContext.defaultParallelism
+    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    k = -(-n // (slots * per_batch)) if per_batch > 0 else 1
+    cuts = min(n, slots * k)
+    if cuts > 1:
+        whole = table.combine_chunks().to_batches()[0]
+        bounds = [n * i // cuts for i in range(cuts + 1)]
+        table = pa.Table.from_batches([whole.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])])
+    df = spark.createDataFrame(table, schema)
+    return df.coalesce(slots) if cuts > slots else df
 
 
 def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFrame:
@@ -171,9 +206,11 @@ def from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
 
 # --- S3: pandas DataFrame source (common.py:128-134) ----------------------
 def from_pandas(spark: SparkSession, pdf) -> DataFrame:
+    import pyarrow as pa
+
     pdf = pdf.reset_index(drop=True)
     pdf.insert(0, ROW_ID, range(len(pdf)))
-    return spark.createDataFrame(pdf)
+    return _arrow_frame(spark, pa.Table.from_pandas(pdf, preserve_index=False))
 
 
 # --- S4/S5/S6: file scans (common.py:144-161) ------------------------------
@@ -245,6 +282,8 @@ def prepare_input_data(spark: SparkSession, data, column: str | None = None) -> 
         if isinstance(data, pd.DataFrame):
             if column is not None and column not in data.columns:
                 raise ValueError(f"column {column!r} not present in the input DataFrame")
+            if len(data) == 0:
+                raise ValueError("empty input data")
             return from_pandas(spark, data)
     except ImportError:  # pragma: no cover
         pass

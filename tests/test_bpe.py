@@ -283,8 +283,33 @@ def test_bpe_merges_releases_its_checkpoint(spark, monkeypatch):
     monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", 0)
     assert 3 % bpe._CHECKPOINT_EVERY != 0
     df = _corpus(spark, "low lower lowest low low", "newer newest new low")
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
     for _ in range(3):
         assert bpe.bpe_merges(df, rounds=3).count() == 3
-    assert jsc.getPersistentRDDs().size() == before
+    # ids, not a count: a frame an earlier test dropped may be garbage
+    # collected meanwhile, which frees its checkpoint and lowers the count
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_long_tokens_take_the_distributed_route(spark, monkeypatch):
+    # a few long distinct tokens are few rows but many bytes: the byte
+    # budget, not the row gate, sends them to the distributed route,
+    # which learns the same merges as the Python route
+    import random
+
+    from sutro_spark.operators import bpe
+    from sutro_spark.session import release_local_checkpoint
+
+    rng = random.Random(7)
+    words = ["".join(rng.choice("ACGT") for _ in range(500)) for _ in range(4)]
+    df = _corpus(spark, " ".join(words[:2]), " ".join(words[2:] + words[:1]))
+    merges, _, ckpt = bpe._train(df, "text", 5)
+    assert ckpt is None  # under the default budget: the Python route
+    # 4 rows, about 6 KB of wrapped symbols
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_BYTES", 4096)
+    assert len(words) <= bpe._DRIVER_VOCAB_ROWS
+    distributed, _, ckpt = bpe._train(df, "text", 5)
+    assert ckpt is not None
+    release_local_checkpoint(ckpt)
+    assert distributed == merges and len(merges) == 5

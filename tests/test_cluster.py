@@ -444,6 +444,7 @@ def test_checkpoint_blocks_reach_steady_state_across_passes(spark):
     # the pass replicates.
     from sutro_spark.operators.bpe import bpe_merges
     from sutro_spark.operators.cluster import connected_components
+    from sutro_spark.operators.pq import ivfpq_prune_stats
     from sutro_spark.operators.retrieval import mmr_rerank
 
     edges = spark.createDataFrame(
@@ -460,11 +461,24 @@ def test_checkpoint_blocks_reach_steady_state_across_passes(spark):
         [(i, [float(i), 1.0]) for i in range(1, 7)],
         "vec_id long, embedding array<double>",
     )
+    # IVF-PQ checkpoints the residual corpus, its query distance tables
+    # and its codes
+    emb = spark.createDataFrame(
+        [(i, [0.8 if d % 4 == i % 4 else 0.05 * ((i * 7 + d) % 3) for d in range(16)])
+         for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    ivf = dict(k=3, coarse_k=4, nprobe=2, m=4, n_codes=4, dim=16)
 
     def one_pass():
         connected_components(edges).collect()
         bpe_merges(docs, rounds=3).collect()
         mmr_rerank(cand, vecs, k=4).count()
+        # released at its own final action, not at the next JVM garbage
+        # collection (which would also keep the pass-over-pass count level)
+        before = _n_persistent(spark)
+        ivfpq_prune_stats(emb, emb.where("vec_id < 4"), **ivf).collect()
+        assert _n_persistent(spark) <= before
         spark.catalog.clearCache()
 
     one_pass()
