@@ -216,25 +216,23 @@ def jobs_results(
     save_format: str = "parquet",
     output_dir: str = ".",
 ) -> DataFrame | None:
-    """``jobs results`` (reference cli.py:216-262): cache-first fetch
-    (outputs as ``inference_result``, unpacked with the job's stored
-    schema), optional parquet/csv save named after the job id."""
-    from sutro_spark.operators.results import read_result_cache, save_results
-    from sutro_spark.sdk import shape_outputs
+    """``jobs results`` (reference cli.py:216-262): the job's
+    ``SutroSpark.get_job_results`` view with the SDK defaults (in input
+    order, outputs as ``inference_result``, unpacked with the job's
+    stored schema), read through a fresh facade, with an optional
+    parquet/csv save named after the job id; None when the cache holds
+    no complete results for the id."""
+    from sutro_spark.operators.results import cache_path, is_complete, save_results
+    from sutro_spark.sdk import SutroSpark
     from sutro_spark.session import get_spark
 
-    spark = get_spark("cli", cpus=4)
-    res = read_result_cache(spark, job_id, [])
-    if res is None:
+    if not is_complete(cache_path(job_id)):
         return None
-    res = shape_outputs(res, "inference_result", sniff=False)
-    drop = []
-    if not include_inputs and "__prompt" in res.columns:
-        drop.append("__prompt")
-    if not include_cumulative_logprobs and "cumulative_logprobs" in res.columns:
-        drop.append("cumulative_logprobs")
-    if drop:
-        res = res.drop(*drop)
+    res = SutroSpark(get_spark("cli", cpus=4)).get_job_results(
+        job_id,
+        include_inputs=include_inputs,
+        include_cumulative_logprobs=include_cumulative_logprobs,
+    )
     if save:
         save_results(res, os.path.join(output_dir, f"{job_id}.{save_format}"), save_format)
     return res

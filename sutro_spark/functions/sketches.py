@@ -853,12 +853,6 @@ def mg_heavy_hitters(
 # float-centroid — this one replays bit-for-bit in any engine.)
 
 
-def _qdigest_depth(col):
-    """Exact heap-node depth: bit_length(id) - 1 via binary-string
-    length (the unigram milli-log2 discipline — no float log)."""
-    return (F.length(F.conv(col.cast("string"), 10, 2)) - 1).cast("int")
-
-
 def _qdigest_py_compress(counts: dict, bits: int, thr: int) -> dict:
     """Pure-Python bottom-up q-digest compression — the same
     deterministic rule as the batch _qdigest_compress set algebra

@@ -36,10 +36,3 @@ def norm(a) -> Column:
 
 def cosine(a, b) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_rounded(a, b, digits: int = 6) -> Column:
-    """Cosine rounded to kill last-ulp differences between engines'
-    summation; use this whenever the value feeds a comparison or an
-    output checked across engines."""
-    return F.round(cosine(a, b), digits)

@@ -1,6 +1,6 @@
 """Distributed BPE merge induction (tokenizer vocabulary learning).
 
-North-star extension (the reference — /root/reference — has no
+North-star extension (the reference has no
 tokenizer surface; its SDK defers tokenization to the service side,
 reference sdk.py). Learns the first ``rounds`` byte-pair-encoding
 merges over a corpus the way Sennrich et al. (ACL 2016) defines them:
@@ -34,31 +34,29 @@ pair counts; the distributed equivalent:
    in both Spark and DuckDB) gives exactly BPE's greedy merge
    semantics — overlapping runs like 'aaa' merge to ('aa','a').
 
-Lineage discipline (the ``cluster.py`` localCheckpoint pattern): the
-weighted vocabulary is checkpointed ONCE up front — so per-round jobs
-re-read the small distinct-word table, never the corpus — and again
-every ``_CHECKPOINT_EVERY`` rounds so replay depth stays bounded
-regardless of ``rounds``. Training exhausts early (vocabulary fully
-merged) by breaking when a round finds no pairs.
+Lineage discipline: the weighted vocabulary is materialized ONCE up
+front — so per-round jobs re-read the small distinct-word table, never
+the corpus — and again every ``_CHECKPOINT_EVERY`` rounds so replay
+depth stays bounded regardless of ``rounds``. Training exhausts early
+(vocabulary fully merged) by breaking when a round finds no pairs.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from sutro_spark.session import barrier as _barrier
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sutro_spark.functions.text import tokens
-from sutro_spark.session import release_local_checkpoint
+from sutro_spark.session import cache_barrier
 
 __all__ = ["bpe_apply", "bpe_merges", "bpe_segment", "bpe_vocab"]
 
 _L = "\x01"
 _R = "\x02"
 
-# truncate the vocabulary lineage every N merge rounds; ~20 keeps the
-# per-round planning cost flat while paying only rounds/20 checkpoint
+# re-materialize the vocabulary every N merge rounds; ~20 keeps the
+# per-round replay depth flat while paying only rounds/20
 # materializations (each is the small distinct-word table, not the
 # corpus)
 _CHECKPOINT_EVERY = 20
@@ -68,7 +66,7 @@ _CHECKPOINT_EVERY = 20
 #: merge rounds run in Python over the collected table instead of one
 #: TakeOrdered job per round. The vocabulary is BOUNDED TRAINER STATE
 #: (distinct words), not corpus data, and the gate reads the ACTUAL row
-#: count of the already-checkpointed table — a web-scale vocabulary
+#: count of the already-materialized table — a web-scale vocabulary
 #: keeps the distributed per-round jobs. 2^16 (w, weight, ws) rows is
 #: a few MB, two orders under the driver-result limit.
 _DRIVER_VOCAB_ROWS = 1 << 16
@@ -102,11 +100,18 @@ def _symbols(ws) -> F.Column:
 def _train(df: DataFrame, text_column: str, rounds: int):
     """Shared trainer: returns (list of (round, lhs, rhs, weight)
     tuples, the final segmented vocabulary DF (w, weight, ws), the live
-    checkpoint that DF reads — None when the Python route already
-    released it).
+    cached table that DF reads — None when the Python route already
+    released it). The vocabulary tables are cached, not checkpointed:
+    ``bpe_segment`` returns a lazy plan over the last one, and
+    clearCache must reach its blocks. Measured on the distributed route
+    (one 62-character word, local[4], two interleaved processes per
+    side): 19 rounds 2.8-3.4 s cached vs 2.6-3.2 s checkpointed, 45
+    rounds 5.9-6.2 s vs 5.4-5.8 s. Each 20-round rotation nests the
+    previous cached plan, so the executed-plan string grows with the
+    rotations (27k characters at 45 rounds vs 0.4k checkpointed).
 
     Eager by design: each round runs one TakeOrdered job over the
-    checkpointed distinct-word table and collects the single winning
+    materialized distinct-word table and collects the single winning
     pair to the driver (see module docstring for why this is the
     linear-plan shape)."""
     if rounds < 1:
@@ -121,7 +126,7 @@ def _train(df: DataFrame, text_column: str, rounds: int):
     # — and at 100 TB the difference between 1 and `rounds` scans)
     cur = words.select(
         "w", "weight", _wrapped_chars(F.col("w")).alias("ws")
-    ).transform(_barrier)
+    ).transform(cache_barrier)
     # r17: a bounded vocabulary routes every merge round to Python over
     # the collected table — the rule is EXACTLY the distributed one
     # (per-position pair counts weighted by word frequency; winner =
@@ -130,14 +135,14 @@ def _train(df: DataFrame, text_column: str, rounds: int):
     # str.replace does), so the learned merges are bit-identical — the
     # bpe [Q] oracles replay training and stay strict-green. Measured
     # at sf0.1 (31-word vocab, rounds=4): one TakeOrdered job per
-    # round -> zero; bpe_encode train 2.9 s -> see OPTIMIZATION_r17.md.
+    # round -> zero; bpe_merges 1.82 -> 0.94 s, bpe_encode 3.23 -> 2.55 s.
     size = cur.agg(
         F.count(F.lit(1)).alias("rows"),
         F.coalesce(F.sum(F.octet_length("ws")), F.lit(0)).alias("bytes"),
     ).first()
     if size["rows"] <= _DRIVER_VOCAB_ROWS and size["bytes"] <= _DRIVER_VOCAB_BYTES:
         vocab = [(r["w"], int(r["weight"]), r["ws"]) for r in cur.collect()]
-        release_local_checkpoint(cur)  # Python owns the state now
+        cur.unpersist()  # Python owns the state now
         merges = []
         for r in range(1, rounds + 1):
             pc: dict[tuple[str, str], int] = {}
@@ -196,9 +201,9 @@ def _train(df: DataFrame, text_column: str, rounds: int):
             # bound replay depth: without this, round r's TakeOrdered
             # job replays r literal replaces over the vocabulary; with
             # it, at most _CHECKPOINT_EVERY
-            cur = cur.transform(_barrier)
-            # the superseded checkpoint's blocks are unreachable now
-            release_local_checkpoint(prev_ckpt)
+            cur = cur.transform(cache_barrier)
+            # nothing reads the superseded table now
+            prev_ckpt.unpersist()
             prev_ckpt = cur
     return merges, cur, prev_ckpt
 
@@ -219,10 +224,10 @@ def bpe_merges(
     """
     merges, _, ckpt = _train(df, text_column, rounds)
     # the merge table is the only output here: on the distributed route
-    # the word-table or last-rotation checkpoint can never be read
-    # again, so free its blocks (the Python route released it already)
+    # the word table or last rotation can never be read again, so free
+    # its blocks (the Python route released it already)
     if ckpt is not None:
-        release_local_checkpoint(ckpt)
+        ckpt.unpersist()
     return df.sparkSession.createDataFrame(
         merges, "round long, lhs string, rhs string, weight long"
     )

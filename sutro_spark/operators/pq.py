@@ -30,8 +30,7 @@ corpus side prunes before ADC.
 
 from __future__ import annotations
 
-from sutro_spark.session import barrier as _barrier
-from sutro_spark.session import release_local_checkpoint
+from sutro_spark.session import cache_barrier
 from sutro_spark.sources.ingest import local_frame
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -566,8 +565,8 @@ def _ivfpq_residual_parts(
     top-k and the bound-pruned variant; ADC itself is :func:`_adc` so
     the pruned variant can run it over a candidate SUBSET — keeping
     the saved work out of the executed plan, not just the output.
-    The fourth element is the residual-corpus checkpoint ``cand``
-    reads, for a caller that runs its final action itself to release."""
+    The fourth element is the cached residual corpus ``cand`` reads,
+    for a caller that runs its final action itself to release."""
     from sutro_spark.operators.kmeans import kmeans
 
     if dim % m != 0:
@@ -597,15 +596,14 @@ def _ivfpq_residual_parts(
     # The residual corpus is read by every train round, the encode pass
     # and the candidate routing — each replay re-runs the full
     # coarse-assignment crossJoin+argmin. Materialize it ONCE
-    # (standard iterative-training discipline; localCheckpoint keeps
-    # row-format storage — persist()'s columnar array cache measured
-    # slower here). Per-QUERY-RUN state, never reused across runs.
-    # Measured 6.11 s -> 4.86 s for ivfpq_residual at sf0.1 (r16).
-    # r16 follow-up: the checkpoint carries ``cluster`` (8 bytes/row)
-    # so candidate routing below reads the materialized table instead
-    # of re-running the kmeans assignment subtree inside the final
-    # action — one fewer corpus-assignment recompute per query.
-    rq = rq.transform(_barrier)
+    # (standard iterative-training discipline). Per-QUERY-RUN state,
+    # never reused across runs. Measured 6.11 s -> 4.86 s for
+    # ivfpq_residual at sf0.1 (r16). It carries ``cluster`` (8
+    # bytes/row) so candidate routing below reads the materialized
+    # table instead of re-running the kmeans assignment subtree inside
+    # the final action. The returned plans read it lazily, so it is
+    # cached, not checkpointed: clearCache reaches the blocks.
+    rq = rq.transform(cache_barrier)
     cb = _pq_train_q(
         rq, m=m, k=n_codes, iters=2, id_column=id_column, sub_dim=sub_dim
     )
@@ -754,16 +752,23 @@ def ivfpq_pruned_topk(
         nprobe=nprobe, m=m, n_codes=n_codes, id_column=id_column,
         vector_column=vector_column, dim=dim, scale=scale, offset=offset,
     )
-    # r17 (guide §3.3/§5): the pruning plan reads qdt and codes from
-    # FOUR subtrees (per-bucket bound, tau probe, survivor filter,
-    # final ADC) — without a barrier the executed plan re-derived the
-    # residual-encode aggregation per reference (32 scans of the
-    # residual checkpoint, 80 Exchanges, 0 ReusedExchange). Both are
-    # bounded state (codes: m rows/vector of 3 ints — the compressed
-    # corpus representation itself; qdt: |queries|*nprobe*m*n_codes
-    # rows). Interleaved A/B at sf0.1: 4.2-4.7 s vs 5.2-5.4 s without.
-    qdt = qdt.transform(_barrier)
-    codes = codes.transform(_barrier)
+    # The pruning plan reads qdt and codes from FOUR subtrees
+    # (per-bucket bound, tau probe, survivor filter, final ADC) —
+    # without a barrier the executed plan re-derived the residual-encode
+    # aggregation per reference (32 scans of the residual corpus, 80
+    # Exchanges, 0 ReusedExchange). Both are bounded state (codes: m
+    # rows/vector of 3 ints — the compressed corpus representation
+    # itself; qdt: |queries|*nprobe*m*n_codes rows). Interleaved A/B at
+    # sf0.1 with localCheckpoint barriers: 4.2-4.7 s vs 5.2-5.4 s
+    # without. The returned plan reads them lazily, so they are cached,
+    # not checkpointed: clearCache reaches the blocks, which a
+    # checkpoint pinned until the JVM collected the dropped frame.
+    # Cached in place of checkpointed (sf0.1, 5 queries, local[4], five
+    # interleaved processes of 5-6 timed calls): median of process
+    # medians 7.37 s vs 7.08 s, about 4% slower, within either side's
+    # spread (6.4-8.9 s vs 6.4-7.7 s).
+    qdt = qdt.transform(cache_barrier)
+    codes = codes.transform(cache_barrier)
     surv = _prune_surviving_buckets(qdt, cand, codes, k)
     kept = cand.join(surv, ["query_id", "cluster"])
     w2 = Window.partitionBy("query_id").orderBy("adist2", "neighbor_id")
@@ -797,22 +802,15 @@ def ivfpq_prune_stats(
     (pytest + the pruned/unpruned [Q] pair share one oracle chain).
 
     Eager: the row is computed here and returned as a local relation,
-    so the call leaves no checkpoint pinned."""
+    so the call leaves nothing cached."""
     qdt, cand, codes, resid = _ivfpq_residual_parts(
         df, queries, coarse_k=coarse_k, coarse_iters=coarse_iters,
         nprobe=nprobe, m=m, n_codes=n_codes, id_column=id_column,
         vector_column=vector_column, dim=dim, scale=scale, offset=offset,
     )
-    # r17 (guide §3.3/§5): the pruning plan reads qdt and codes from
-    # FOUR subtrees (per-bucket bound, tau probe, survivor filter,
-    # final ADC) — without a barrier the executed plan re-derived the
-    # residual-encode aggregation per reference (32 scans of the
-    # residual checkpoint, 80 Exchanges, 0 ReusedExchange). Both are
-    # bounded state (codes: m rows/vector of 3 ints — the compressed
-    # corpus representation itself; qdt: |queries|*nprobe*m*n_codes
-    # rows). Interleaved A/B at sf0.1: 4.2-4.7 s vs 5.2-5.4 s without.
-    qdt = qdt.transform(_barrier)
-    codes = codes.transform(_barrier)
+    # the same barriers as ivfpq_pruned_topk
+    qdt = qdt.transform(cache_barrier)
+    codes = codes.transform(cache_barrier)
     surv = _prune_surviving_buckets(qdt, cand, codes, k)
     kept = cand.join(surv, ["query_id", "cluster"])
     full = cand.agg(
@@ -822,11 +820,10 @@ def ivfpq_prune_stats(
     pruned = kept.agg(F.count(F.lit(1)).cast("long").alias("cand_pruned"))
     stats = full.crossJoin(F.broadcast(pruned))
     # the final action: nothing reads the residual, qdt or codes
-    # checkpoints after it, so their blocks go now, not whenever the
-    # JVM next collects garbage (clearCache does not reach them)
+    # caches after it, so their blocks go now
     row = stats.collect()[0]
-    for ckpt in (resid, qdt, codes):
-        release_local_checkpoint(ckpt)
+    for cached in (resid, qdt, codes):
+        cached.unpersist()
     return local_frame(df.sparkSession, [tuple(row)], stats.schema)
 
 

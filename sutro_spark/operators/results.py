@@ -1,8 +1,9 @@
-"""Results-shaping operators (SURVEY.md §2.2 P4/P5, §2.5 J1/J2, §2.1 S10).
+"""Results-shaping operators (SURVEY.md §2.2 P5, §2.5 J1, §2.1 S10/S11).
 
-Reference: /root/reference/sutro/sdk.py:1131-1340 (get_job_results) —
-rename outputs, fixed column order, positional join back onto the
-original table, parquet result cache with schema-superset reuse.
+Reference: the SDK's get_job_results (sdk.py:1131-1340) — fixed column
+order, positional join back onto the original table, one parquet
+results file per job. ``SutroSpark.get_job_results`` composes these
+into the one user-facing view of a job's results.
 """
 
 from __future__ import annotations
@@ -15,11 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from sutro_spark.sources.ingest import ROW_ID
-
-
-def rename_output(df: DataFrame, output_column: str) -> DataFrame:
-    """P4 — ``results.rename({"outputs": output_column})`` (sdk.py:1231)."""
-    return df.withColumnRenamed("outputs", output_column)
 
 
 # column-metadata key under which a job's declared output schema rides
@@ -35,9 +31,7 @@ def tag_output_schema(df: DataFrame, output_schema: dict) -> DataFrame:
 
 def output_schema_of(df: DataFrame) -> dict | None:
     """The JSON schema stored on ``outputs`` by :func:`tag_output_schema`,
-    or None for schema-less outputs (or no ``outputs`` column)."""
-    if "outputs" not in df.columns:
-        return None
+    or None for schema-less outputs."""
     stored = df.schema["outputs"].metadata.get(OUTPUT_SCHEMA_KEY)
     return json.loads(stored) if stored else None
 
@@ -140,17 +134,7 @@ def positional_join(left: DataFrame, right: DataFrame) -> DataFrame:
     return left.join(right, on=ROW_ID, how="inner")
 
 
-def check_id_collision(df: DataFrame, id_column: str, fields: list[str]) -> None:
-    """J2 — the user's id column must survive JSON unpack; a JSON field
-    with the same name is an error (test_id_column.py:113-163)."""
-    if id_column in fields:
-        raise ValueError(
-            f"id_column {id_column!r} collides with a JSON output field; "
-            "rename the id column or the schema field"
-        )
-
-
-# --- S10: parquet result cache with schema-superset reuse -----------------
+# --- S10: parquet result cache, one file per job ---------------------------
 def cache_dir() -> str:
     return os.environ.get(
         "SUTRO_SPARK_CACHE", os.path.expanduser("~/.sutro_spark/job-results")
@@ -179,21 +163,17 @@ def write_result_cache(df: DataFrame, job_id: str) -> str:
 def read_result_cache(
     spark: SparkSession,
     job_id: str,
-    expected_columns: list[str],
     path: str | None = None,
     schema: StructType | None = None,
 ) -> DataFrame | None:
-    """Reuse iff the cached columns ⊇ expected (sdk.py:1159-1172).
+    """The job's complete results file as written, or None.
     ``path`` overrides the job id's cache path; ``schema``, when known,
     is the one the file was written with, which spares the one-task job
     that infers it from a file footer."""
     path = path or cache_path(job_id)
     if not is_complete(path):
         return None
-    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    if not set(expected_columns) <= set(df.columns):
-        return None
-    return df
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def save_results(df: DataFrame, path: str, fmt: str = "parquet") -> None:

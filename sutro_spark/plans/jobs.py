@@ -282,14 +282,15 @@ class JobRegistry:
         )
         return local_frame(self.spark, rows, schema)
 
-    def results_file(self, job_id: str) -> tuple[str, StructType | None]:
-        """Where the job's parquet results live and the schema they are
-        written with, both fixed at submit for a job this registry knows;
-        for any other id, the cache path for it and no schema."""
+    def results_file(self, job_id: str) -> tuple[str, StructType | None, int | None]:
+        """Where the job's parquet results live, the schema they are
+        written with, both fixed at submit, and the job's row count, for
+        a job this registry knows; for any other id, the cache path for
+        it and no schema or count."""
         job = self.jobs.get(job_id)
         if job is None:
-            return cache_path(job_id), None
-        return job.results_path, job.schema
+            return cache_path(job_id), None, None
+        return job.results_path, job.schema, job.rows_total
 
     def get_job_results(self, job_id: str) -> DataFrame | None:
         """The succeeded job's parquet results, read fresh with the

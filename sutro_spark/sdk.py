@@ -7,7 +7,11 @@ Differences by design (Spark-first, SURVEY.md §0):
 - ``data`` accepts Spark/pandas DataFrames, lists, records, or paths;
   results come back as Spark DataFrames with the input columns carried
   through (the reference re-joins positionally; here alignment is
-  structural).
+  structural). A job's results have one view, built only by
+  :meth:`SutroSpark.get_job_results`: rows in input order, outputs
+  JSON-unpacked, no ``__row_id`` or ``__prompt`` column. Attached
+  ``infer``, ``await_job_completion`` and the CLI's ``jobs results``
+  all return it.
 - jobs execute on the local cluster via the JobRegistry instead of a
   remote API; job ids, statuses, polling, cancellation, quotas, and the
   parquet result cache keep the reference's semantics.
@@ -25,9 +29,10 @@ from sutro_spark.functions.prompt import normalize_output_schema
 from sutro_spark.operators import templates as _templates
 from sutro_spark.operators.backends import STUB, Backend
 from sutro_spark.operators.results import (
+    order_results,
     output_schema_of,
+    positional_join,
     read_result_cache,
-    rename_output,
     tag_output_schema,
     write_result_cache,  # noqa: F401 - unused here; perfbench traces sdk.write_result_cache
 )
@@ -35,26 +40,7 @@ from sutro_spark.operators.transform import llm_transform
 from sutro_spark.operators.unpack import unpack_json_outputs
 from sutro_spark.plans.cost import estimate_cost
 from sutro_spark.plans.jobs import JobRegistry, JobStatus
-from sutro_spark.sources.ingest import prepare_input_data
-
-
-def shape_outputs(
-    res: DataFrame, output_column: str, *, unpack_json: bool = True, sniff: bool = True
-) -> DataFrame:
-    """Turn a job's stored results (raw ``outputs``, reference layout
-    sdk.py:1230-1233) into the user's view: rename ``outputs`` →
-    ``output_column``, then unpack the JSON fields (sdk.py:1278-1320)
-    with the job's stored schema — or, with ``sniff``, by probing row 0
-    when the job declared none. A cache file without ``outputs`` was
-    written before jobs stored the raw layout and already holds the
-    user's view, so it is returned as is."""
-    if "outputs" not in res.columns:
-        return res
-    schema = output_schema_of(res)
-    res = rename_output(res, output_column)
-    if unpack_json and (schema is not None or sniff):
-        res = unpack_json_outputs(res, output_column, schema)
-    return res
+from sutro_spark.sources.ingest import ROW_ID, prepare_input_data, with_row_id
 
 
 class SutroSpark:
@@ -172,14 +158,11 @@ class SutroSpark:
         )
 
     def _finalize_results(self, job_id, output_column, *, unpack_json=True, show_preview=False):
-        res = self.registry.await_job_completion(job_id)
-        if res is None:
+        if self.registry.await_job_completion(job_id) is None:
             raise RuntimeError(
                 f"job {job_id} failed: {self.registry.get_failure_reason(job_id)}"
             )
-        # the attached view unpacks only a declared schema, never sniffs
-        res = shape_outputs(res, output_column, unpack_json=unpack_json, sniff=False)
-        res = res.drop("__prompt")
+        res = self.get_job_results(job_id, output_column, unpack_json=unpack_json)
         if show_preview:
             # the attached-run preview print (reference sdk.py:437-459);
             # here `res` already carries the input columns structurally
@@ -238,8 +221,11 @@ class SutroSpark:
         self.registry.cancel_job(job_id)
 
     def await_job_completion(self, job_id: str, timeout: float = 7200.0, **kw):
-        res = self.registry.await_job_completion(job_id, timeout=timeout, **kw)
-        return res.drop("__prompt") if res is not None and "__prompt" in res.columns else res
+        """Wait for the job; its :meth:`get_job_results` view on success,
+        None when it failed or was cancelled."""
+        if self.registry.await_job_completion(job_id, timeout=timeout, **kw) is None:
+            return None
+        return self.get_job_results(job_id)
 
     def attach(
         self,
@@ -311,9 +297,15 @@ class SutroSpark:
         disable_cache: bool = False,
         unpack_json: bool = True,
     ):
-        """Results fetch: a read of the job's parquet file (reference:
-        sdk.py:1131-1340).
+        """Results fetch: the one view of a job's results (reference:
+        sdk.py:1131-1340), also what attached ``infer``,
+        :meth:`await_job_completion` and ``sutro jobs results`` return.
+        It reads the job's parquet file and
 
+        - renames the raw ``outputs`` to ``output_column`` and, with
+          ``unpack_json``, promotes its JSON fields to columns: with the
+          schema the job stored, or without one by probing row 0
+          (sdk.py:1278-1320);
         - ``include_inputs`` resurfaces the shipped prompt as an
           ``inputs`` column, ordered first (sdk.py:1251-1276);
         - ``with_original_df`` concatenates the results onto the given
@@ -321,33 +313,29 @@ class SutroSpark:
           ``with_columns`` (sdk.py:1322-1334), here an equi-join on the
           engine-wide ``__row_id``; result columns win name collisions
           exactly like ``with_columns`` does;
+        - returns the rows in input order, without ``__row_id`` or
+          ``__prompt``;
         - ``disable_cache`` is accepted for parity and has no effect: a
           job's results exist only as its parquet file, so every fetch
           reads it.
         """
-        from sutro_spark.operators.results import order_results, positional_join
-        from sutro_spark.sources.ingest import ROW_ID, with_row_id
-
-        # no server to refetch from: the job's file is the only copy, so
-        # a missing optional column is tolerated below, not a miss
-        path, schema = self.registry.results_file(job_id)
-        res = read_result_cache(self.spark, job_id, [], path=path, schema=schema)
-        # raw ``outputs``, or ``output_column`` in a cache written before
-        # jobs stored the raw layout
-        if res is None or not {"outputs", output_column} & set(res.columns):
+        path, schema, rows = self.registry.results_file(job_id)
+        res = read_result_cache(self.spark, job_id, path=path, schema=schema)
+        if res is None:
             raise ValueError(f"no results for job {job_id}")
-        res = shape_outputs(res, output_column, unpack_json=unpack_json)
-        if include_inputs and "__prompt" in res.columns:
-            res = res.withColumnRenamed("__prompt", "inputs")
-        elif "__prompt" in res.columns:
-            res = res.drop("__prompt")
+        output_schema = output_schema_of(res)
+        res = res.withColumnRenamed("outputs", output_column)
+        if unpack_json:
+            res = unpack_json_outputs(res, output_column, output_schema)
+        if "__prompt" in res.columns:
+            res = (
+                res.withColumnRenamed("__prompt", "inputs")
+                if include_inputs
+                else res.drop("__prompt")
+            )
         if not include_cumulative_logprobs and "cumulative_logprobs" in res.columns:
             res = res.drop("cumulative_logprobs")
         if with_original_df is not None:
-            if ROW_ID not in res.columns:
-                raise ValueError(
-                    "results lack __row_id; with_original_df needs positional alignment"
-                )
             orig = (
                 with_original_df
                 if ROW_ID in with_original_df.columns
@@ -357,6 +345,14 @@ class SutroSpark:
             if overlap:  # result columns replace originals (with_columns rule)
                 orig = orig.drop(*overlap)
             res = positional_join(orig, res)
+        per_batch = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        if rows is not None and 0 < per_batch and rows <= per_batch:
+            # A job of at most one Arrow batch of rows is ordered in one
+            # task: on a single partition the sort needs no exchange, so
+            # it runs neither the range shuffle's sampling job nor its
+            # shuffle, whose two extra scans per fetch of a small job
+            # cost more than the sort and made the driver's heap grow.
+            res = res.coalesce(1)
         return order_results(
             res,
             output_column,

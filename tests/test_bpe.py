@@ -292,6 +292,23 @@ def test_bpe_merges_releases_its_checkpoint(spark, monkeypatch):
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
+def test_bpe_segment_blocks_go_with_clear_cache(spark, monkeypatch):
+    # on the distributed route the returned segmentation is a lazy plan
+    # over the trainer's last vocabulary table; clearCache must reach its
+    # blocks, and the plan must still run from its lineage afterwards
+    from sutro_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", -1)  # force distributed
+    df = _corpus(spark, "low lower lowest low low", "newer newest new low")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    seg = bpe.bpe_segment(df, rounds=3)
+    rows = sorted((r["w"], list(r["subwords"])) for r in seg.collect())
+    spark.catalog.clearCache()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    assert sorted((r["w"], list(r["subwords"])) for r in seg.collect()) == rows
+
+
 def test_long_tokens_take_the_distributed_route(spark, monkeypatch):
     # a few long distinct tokens are few rows but many bytes: the byte
     # budget, not the row gate, sends them to the distributed route,
@@ -299,7 +316,6 @@ def test_long_tokens_take_the_distributed_route(spark, monkeypatch):
     import random
 
     from sutro_spark.operators import bpe
-    from sutro_spark.session import release_local_checkpoint
 
     rng = random.Random(7)
     words = ["".join(rng.choice("ACGT") for _ in range(500)) for _ in range(4)]
@@ -311,5 +327,5 @@ def test_long_tokens_take_the_distributed_route(spark, monkeypatch):
     assert len(words) <= bpe._DRIVER_VOCAB_ROWS
     distributed, _, ckpt = bpe._train(df, "text", 5)
     assert ckpt is not None
-    release_local_checkpoint(ckpt)
+    ckpt.unpersist()
     assert distributed == merges and len(merges) == 5

@@ -113,7 +113,7 @@ def test_results_dir_counts_only_with_success_marker(spark, documents, tmp_path,
     # a write killed before its commit leaves a directory without _SUCCESS
     os.remove(os.path.join(path, "_SUCCESS"))
     assert not is_complete(cache_path("job-marker"))
-    assert read_result_cache(spark, "job-marker", []) is None
+    assert read_result_cache(spark, "job-marker") is None
     assert jobs_status("job-marker") == "UNKNOWN"
 
 
@@ -235,16 +235,6 @@ def test_progress_monotonic():
     p.update_tokens(input_tokens=50)
     p.update_tokens(input_tokens=40)  # stale → ignored
     assert p.tokens["input_tokens"] == 50
-
-
-def test_result_cache_superset_rule(spark, documents, tmp_path, monkeypatch):
-    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
-    out = llm_transform(documents.limit(5), "text")
-    write_result_cache(out, "job-c1")
-    hit = read_result_cache(spark, "job-c1", ["doc_id", "outputs"])
-    assert hit is not None and hit.count() == 5
-    miss = read_result_cache(spark, "job-c1", ["doc_id", "outputs", "not_there"])
-    assert miss is None
 
 
 def test_streaming_event_stats_matches_batch(spark, sf_dir, tmp_path):

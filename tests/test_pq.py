@@ -168,6 +168,24 @@ def test_ivfpq_pruned_equals_unpruned_with_fewer_candidates(spark):
     assert row.cand_pruned < row.cand_full, row
 
 
+def test_ivfpq_pruned_topk_blocks_go_with_clear_cache(spark):
+    # the returned plan is lazy and reads the residual corpus, qdt and
+    # codes; clearCache must reach their blocks, and the plan must still
+    # run from its lineage afterwards
+    from sutro_spark.operators.pq import ivfpq_pruned_topk
+
+    df = _vecs(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = ivfpq_pruned_topk(
+        df, df.where(F.col("vec_id") < 4), k=3, coarse_k=4, nprobe=2, m=4, n_codes=4, dim=16
+    )
+    rows = sorted(map(tuple, out.collect()))
+    spark.catalog.clearCache()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    assert sorted(map(tuple, out.collect())) == rows
+
+
 def test_ivfpq_rescore_equals_exact_when_routing_is_total(spark):
     # r12 (VERDICT #1): with coarse_k=1/nprobe=1 every vector is a
     # routed candidate, so an exact rescore over a shortlist covering
