@@ -3,10 +3,12 @@
 
 Split by scale:
 - **A1 pairwise win/tie counts** is the big-data half — ballots can be
-  billions of rows — so it is pure relational Spark: posexplode + self
-  equi-join on the ballot id + ONE groupBy that counts wins and ties
-  together as conditional counts. Shuffles on (ballot id) then
-  (winner, loser); both keys are high-cardinality and unskewed.
+  billions of rows — so it is pure relational Spark: each ballot's
+  ranking is exploded twice, winner side then loser side, which pairs
+  its labels inside the row with no join, and ONE groupBy counts wins
+  and ties together as conditional counts. The input is read once and
+  the only shuffle is on (winner, loser), which is high-cardinality and
+  unskewed.
 - **A2 Bradley-Terry MM → Elo** operates on a |labels|² matrix — never
   big data — so it is deliberately driver-side numpy (the reference does
   the same, evals.py:249-313). Algorithm: Hunter (2004) MM iterations
@@ -24,26 +26,18 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sutro_spark.sources.ingest import ROW_ID, local_frame, with_row_id
-
-_BALLOT = "__ballot_id"
+from sutro_spark.sources.ingest import local_frame
 
 
-def _exploded(df: DataFrame, ranking_column: str, tie_delimiter: str | None) -> DataFrame:
-    """(ballot_id, pos, label) rows. An element like ``"A|B"`` is a tie
-    group when ``tie_delimiter='|'`` (reference models ties as tuples
-    inside the ranking list, evals.py:216-247)."""
-    src = with_row_id(df, None).withColumnRenamed(ROW_ID, _BALLOT)
-    ex = src.select(
-        _BALLOT, F.posexplode(F.col(ranking_column)).alias("pos", "element")
-    ).where(F.col("element").isNotNull())
-    if tie_delimiter:
-        ex = ex.select(
-            _BALLOT, "pos", F.explode(F.split("element", f"\\{tie_delimiter}")).alias("label")
-        )
-    else:
-        ex = ex.withColumnRenamed("element", "label")
-    return ex
+def _labels(df: DataFrame, tie_delimiter: str | None, side: str) -> DataFrame:
+    """Add ``{side}_pos`` and ``{side}`` columns: one row per label of
+    each element of the ``ballot`` array. An element like ``"A|B"`` is
+    a tie group when ``tie_delimiter='|'`` (reference models ties as
+    tuples inside the ranking list, evals.py:216-247)."""
+    pos, element = f"{side}_pos", f"{side}_element"
+    ex = df.select("*", F.posexplode("ballot").alias(pos, element))
+    label = F.explode(F.split(element, f"\\{tie_delimiter}")) if tie_delimiter else F.col(element)
+    return ex.select(*df.columns, pos, label.alias(side))
 
 
 def pairwise_counts(
@@ -57,31 +51,32 @@ def pairwise_counts(
     has a win or a tie; both counts come from one grouped aggregate of
     conditional counts over the pairs that are either.
 
-    Scale shape — MEASURED, do not "optimize" into array lambdas: at
-    1.2M ballots (sf0.1 ×8) this posexplode + ballot-id equi-join runs
-    ~21 s while the join-free rewrite via nested higher-order functions
-    (flatten/transform/filter generating pair structs in-scan) takes
-    30–110 s — Catalyst HOF lambdas are interpreted per element, while
-    the hash self-join and the count aggregate stay inside whole-stage
-    codegen. The ballot id is ``monotonically_increasing_id`` (zero
-    shuffle); the join key is high-cardinality and unskewed, so the
-    equi-join partitions cleanly at any ballot count.
+    Pairs are made inside each ballot row: the ranking array is
+    exploded twice, once for the winner side and once, on each winner
+    row, for the loser side, so there is no join, no ballot id and the
+    input plan (a model transform, for ``rank``) is evaluated once.
+    Scale shape, MEASURED (local[4], medians of 5 in two sessions):
+    over 1.2M parquet ballots with every seventh holding a tie,
+    ``collect()`` took 1.1–1.2 s for 3 labels and 1.9–2.1 s for 5,
+    against 3.1–3.3 s and 4.3–5.4 s for the posexplode + ballot-id
+    self-join it replaced, with identical rows. Both explodes are plain
+    ``Generate``s feeding the count aggregate, which stay in
+    whole-stage codegen; do not "optimize" them into array lambdas: an
+    earlier rewrite via nested higher-order functions
+    (flatten/transform/filter generating pair structs) took 30–110 s
+    where the self-join took ~21 s, because Catalyst HOF lambdas are
+    interpreted per element.
     """
-    ex = _exploded(df, ranking_column, tie_delimiter)
-    w = ex.alias("w")
-    l = ex.alias("l")
-    before = F.col("w.pos") < F.col("l.pos")
-    tied = F.col("w.pos") == F.col("l.pos")
+    ballots = df.select(F.col(ranking_column).alias("ballot"))
+    pairs = _labels(_labels(ballots, tie_delimiter, "w"), tie_delimiter, "l")
+    before = F.col("w_pos") < F.col("l_pos")
+    tied = F.col("w_pos") == F.col("l_pos")
     return (
-        w.join(l, F.col(f"w.{_BALLOT}") == F.col(f"l.{_BALLOT}"))
         # label != label guard: a label appearing at two positions in one
         # ballot must not produce a self-win row (reference skips w == l,
         # evals.py:234); a tie counts once, on the ordered pair.
-        .where(
-            (before & (F.col("w.label") != F.col("l.label")))
-            | (tied & (F.col("w.label") < F.col("l.label")))
-        )
-        .groupBy(F.col("w.label").alias("winner"), F.col("l.label").alias("loser"))
+        pairs.where((before & (F.col("w") != F.col("l"))) | (tied & (F.col("w") < F.col("l"))))
+        .groupBy(F.col("w").alias("winner"), F.col("l").alias("loser"))
         .agg(F.count_if(before).alias("wins"), F.count_if(tied).alias("ties"))
     )
 

@@ -10,7 +10,11 @@ re-join", the input rows flow **through** an Arrow-batched ``mapInPandas``
 and the output column is appended in place. Alignment is then free —
 no shuffle, no join, no ordering assumption. The backend is called once
 per Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows),
-which is the Spark analog of the reference's server-side batching.
+which is the Spark analog of the reference's server-side batching. An
+in-memory facade input has one partition per Arrow batch
+(``sources.ingest._arrow_frame``), so a small request (up to one batch
+of rows) is one task and one backend call, and with an ``HttpBackend``
+one remote job, as the reference submits one job per request.
 
 The backend is a value: the caller passes the object, the
 ``mapInPandas`` closure captures it, and Spark pickles it with every

@@ -13,11 +13,14 @@ ratings) enter Spark one way: through Arrow (:func:`local_frame`,
 ``spark.sql.execution.arrow.localRelationThreshold`` (1 MiB in
 :func:`~sutro_spark.session.get_spark`) become a ``LocalRelation`` whose
 rows live in the driver's plan; larger ones become an RDD of Arrow
-batches, one partition per batch. Either way the input has one
-partition per task slot (fewer only with fewer rows than slots), in
-row order, so a job runs one wave of tasks and writes one file per slot
-(:func:`_arrow_frame`), and no Python worker unpickles rows on a scan,
-which is what a per-request prototyping call waits on.
+batches. No Python worker unpickles rows on a scan. An input to the
+facade has one partition per Arrow batch, at most one per task slot,
+in row order (:func:`_arrow_frame`): a request of up to
+``maxRecordsPerBatch`` rows is one Python task and one backend call,
+which is what a per-request prototyping call waits on, and a large
+input runs one wave of tasks, one file per slot. Tables the driver
+builds for itself are Spark's plain frame, so collecting them runs no
+Spark job.
 
 Spark has no implicit row order, so the engine's design rule is: **every
 source mints an explicit ``__row_id`` column** and every order-sensitive
@@ -52,16 +55,21 @@ def local_frame(
     """Driver-side rows — tuples in schema order, or dicts keyed by
     column — as one Arrow table: a ``LocalRelation`` in the driver's
     plan below ``spark.sql.execution.arrow.localRelationThreshold``
-    (1 MiB), an RDD of Arrow batches above it, one partition per task
-    slot either way (:func:`_arrow_frame`), never a pickled RDD
+    (1 MiB), an RDD of Arrow batches above it, never a pickled RDD
     re-serialized through a Python worker on every scan. Empty and
     non-empty inputs take the same route, whatever the session's Arrow
-    confs say.
+    confs say. The frame is Spark's own, with no repartitioning above
+    it, so collecting a small table runs no Spark job.
 
     Without ``schema`` the types come from Spark's own list inference
     (``_inferSchemaFromList``), so each column gets the type
     ``createDataFrame(rows)`` would give it.
     """
+    return spark.createDataFrame(*_arrow_table(spark, rows, schema))
+
+
+def _arrow_table(spark: SparkSession, rows: list, schema: StructType | str | None):
+    """``rows`` as a ``pyarrow.Table`` and the Spark schema it carries."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -78,36 +86,42 @@ def local_frame(
     table = pa.table(
         [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
     )
-    return _arrow_frame(spark, table, schema)
+    return table, schema
 
 
 def _arrow_frame(spark: SparkSession, table, schema: StructType | None = None) -> DataFrame:
-    """``createDataFrame`` over an Arrow table cut into ``slots * k``
-    near-equal record batches, the fewest that keep each within
-    ``maxRecordsPerBatch``, then coalesced to one partition per slot.
+    """An input table as a frame with one partition per Arrow batch, at
+    most one per task slot: ``min(slots, ceil(rows / maxRecordsPerBatch))``
+    partitions, in ``__row_id`` order.
 
-    Above the ``LocalRelation`` threshold Spark makes one partition per
-    record batch, so the cut sets the partitions: a 5k-row input gets
-    ``slots`` partitions, not one 10k-row batch on one slot, and a
-    100k-row input gets 25k rows per slot, not 10k-row batches in three
-    waves of tasks. The count comes from the driver's row count, not
-    from the plan. A ``coalesce`` without a shuffle joins ``k``
-    neighbouring batches, so ``__row_id`` order is unchanged. Below the
-    threshold the ``LocalRelation`` scan already has ``min(rows, slots)``
-    partitions and ``k`` is 1."""
+    A prototyping request of a few hundred rows is thus one partition:
+    one Python task and one backend call, where a partition per slot
+    would start a task, and a remote job, per slot, each paying the
+    task's fixed start-up cost. A 30k-row input gets three 10k-row
+    partitions; a 100k-row input 25k rows per slot.
+
+    The table is cut into ``parts * k`` near-equal record batches, ``k``
+    the fewest that keep each within ``maxRecordsPerBatch``. Above the
+    ``LocalRelation`` threshold Spark makes one partition per record
+    batch, so for ``k == 1`` the cut sets the partitions; a
+    ``LocalRelation`` scan has ``min(rows, slots)`` partitions instead.
+    Either way a ``coalesce`` without a shuffle joins neighbouring
+    batches down to ``parts``, so ``__row_id`` order is unchanged. The
+    count comes from the driver's row count, not from the plan."""
     import pyarrow as pa
 
     n = table.num_rows
     slots = spark.sparkContext.defaultParallelism
     per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    k = -(-n // (slots * per_batch)) if per_batch > 0 else 1
-    cuts = min(n, slots * k)
+    parts = max(1, min(slots, -(-n // per_batch))) if per_batch > 0 else 1
+    k = -(-n // (parts * per_batch)) if per_batch > 0 else 1
+    cuts = min(n, parts * k)
     if cuts > 1:
         whole = table.combine_chunks().to_batches()[0]
         bounds = [n * i // cuts for i in range(cuts + 1)]
         table = pa.Table.from_batches([whole.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])])
     df = spark.createDataFrame(table, schema)
-    return df.coalesce(slots) if cuts > slots else df
+    return df.coalesce(parts) if parts < max(cuts, min(n, slots)) else df
 
 
 def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFrame:
@@ -196,12 +210,14 @@ def with_row_id(df: DataFrame, order_by: Sequence[str] | None = None) -> DataFra
 
 # --- S1: list-of-prompts source (common.py:126-127) -----------------------
 def from_list(spark: SparkSession, prompts: Iterable[str], column: str = "prompt") -> DataFrame:
-    return local_frame(spark, list(enumerate(prompts)), f"{ROW_ID} long, {column} string")
+    rows = list(enumerate(prompts))
+    return _arrow_frame(spark, *_arrow_table(spark, rows, f"{ROW_ID} long, {column} string"))
 
 
 # --- S2: list-of-records source (sdk.py:701-702) --------------------------
 def from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
-    return local_frame(spark, [{ROW_ID: i, **r} for i, r in enumerate(records)])
+    rows = [{ROW_ID: i, **r} for i, r in enumerate(records)]
+    return _arrow_frame(spark, *_arrow_table(spark, rows, None))
 
 
 # --- S3: pandas DataFrame source (common.py:128-134) ----------------------

@@ -1,7 +1,7 @@
 """In-memory inputs above ``spark.sql.execution.arrow.localRelationThreshold``
-enter Spark as an RDD of Arrow batches with one partition per task slot, in
-``__row_id`` order, and a job the registry knows is read back with the
-schema it wrote, without a Spark job to infer it."""
+enter Spark as an RDD of Arrow batches with one partition per batch, at most
+one per task slot, in ``__row_id`` order, and a job the registry knows is
+read back with the schema it wrote, without a Spark job to infer it."""
 
 import os
 
@@ -50,8 +50,8 @@ def so(spark, tmp_path, monkeypatch):
 
 
 # 5k prompts of 300 characters (about 1.5 MB) fit in one 10k-row Arrow
-# batch; 30k of 60 characters (about 1.8 MB) fill three. Both are above
-# the session's 1 MiB threshold and below ``slots`` batches.
+# batch, so one partition; 30k of 60 characters (about 1.8 MB) fill three.
+# Both are above the session's 1 MiB threshold and below ``slots`` batches.
 @pytest.mark.parametrize("n,width", [(5_000, 300), (30_000, 60)])
 @pytest.mark.parametrize("kind", ["list", "pandas"])
 def test_large_input_is_arrow_batches_on_the_task_slots(spark, so, kind, n, width):
@@ -59,19 +59,53 @@ def test_large_input_is_arrow_batches_on_the_task_slots(spark, so, kind, n, widt
     data = pd.DataFrame({"prompt": prompts}) if kind == "pandas" else prompts
     assert len("".join(prompts).encode()) > 1 << 20
     slots = spark.sparkContext.defaultParallelism
+    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    parts = min(slots, -(-n // per_batch))
     df = prepare_input_data(spark, data, "prompt")
     assert "LocalRelation" not in _plan(df)
-    assert df.rdd.getNumPartitions() == min(n, slots)
+    assert df.rdd.getNumPartitions() == parts
 
     name = f"arrow-{kind}-{n}"
     res = so.infer(data, column="prompt", name=name)
     job_id = next(j for j, job in so.registry.jobs.items() if job.name == name)
     path = so.registry.jobs[job_id].results_path
-    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == min(n, slots)
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == parts
     assert res.count() == n
     got = so.get_job_results(job_id, include_inputs=True).toPandas()
     assert got["inputs"].tolist() == prompts
     assert got["inference_result"].tolist() == ["ECHO: " + p[:32].upper() for p in prompts]
+
+
+def _records(prompts):
+    return [{"prompt": p} for p in prompts]
+
+
+@pytest.mark.parametrize(
+    "make", [list, _records, lambda ps: pd.DataFrame({"prompt": ps})], ids=["list", "records", "pandas"]
+)
+def test_a_small_input_is_one_partition_over_a_local_relation(spark, make):
+    # 200 rows are one Arrow batch: one partition, not one per slot,
+    # over the LocalRelation the driver's rows make
+    df = prepare_input_data(spark, make(_prompts(200, 60)), "prompt")
+    plan = _plan(df)
+    assert plan.rstrip().splitlines()[-1].lstrip(" +-:").startswith("LocalRelation")
+    assert "LogicalRDD" not in plan
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_a_small_infer_writes_one_file_in_one_task(spark, so):
+    prompts = _prompts(200, 60)
+    res = so.infer(prompts, name="one-batch")
+    job_id = next(j for j, job in so.registry.jobs.items() if job.name == "one-batch")
+    path = so.registry.jobs[job_id].results_path
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
+    # the job's write is one Spark job of one stage with one task
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    (write,) = tracker.getJobIdsForGroup(job_id)
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(write).stageIds]
+    assert [s.numTasks for s in stages] == [1]
+    assert [r["inference_result"] for r in res.collect()] == ["ECHO: " + p[:32].upper() for p in prompts]
 
 
 def test_more_batches_than_slots_coalesce_in_row_id_order(spark):

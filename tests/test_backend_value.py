@@ -5,7 +5,9 @@ closure and serves every partition's batches.
 The in-process loopback server speaks the sutro wire protocol and
 answers ``job-results`` per job id, so concurrent tasks each get their
 own batch back. Its replies differ from the stub's, so a backend that
-silently fell back to the stub would fail the row checks.
+silently fell back to the stub would fail the row checks. It keeps
+every submitted job, so a test can count what a request sent: each
+input row once, and a small request as one remote job.
 """
 
 from __future__ import annotations
@@ -21,23 +23,33 @@ import pytest
 pytest.importorskip("requests")
 
 from sutro_spark.operators.backends import HttpBackend  # noqa: E402
-from sutro_spark.operators.templates import run_function  # noqa: E402
+from sutro_spark.operators.elo import pairwise_counts  # noqa: E402
+from sutro_spark.operators.templates import rank, run_function  # noqa: E402
 from sutro_spark.sdk import SutroSpark  # noqa: E402
 
 TEXTS = [f"row {i} " + "x" * (i % 7) for i in range(24)]
 CLASSES = ["pos", "neg"]
+# a prototyping-sized request: well under one Arrow batch
+RECORDS = [{"a": f"alpha {i}", "b": f"beta {i * 7 % 13}", "c": f"gamma {i % 5}"} for i in range(200)]
+LABELS = ["a", "b", "c"]
 
 
 def reply(text: str, schema: dict | None) -> str:
     """The server's output for one input: plain text without a schema;
     with one, JSON whose enum fields pick a different label than the
-    stub would."""
+    stub would, and whose arrays of enum items hold every label,
+    rotated by the input's length."""
     if schema is None:
         return "REMOTE " + text.upper()
     out = {}
     for name, spec in schema.get("properties", {}).items():
         enum = spec.get("enum")
-        out[name] = enum[(len(text) + 1) % len(enum)] if enum else "remote"
+        items = spec.get("items", {}).get("enum")
+        if items:
+            k = len(text) % len(items)
+            out[name] = items[k:] + items[:k]
+        else:
+            out[name] = enum[(len(text) + 1) % len(enum)] if enum else "remote"
     return json.dumps(out)
 
 
@@ -120,6 +132,36 @@ def test_http_backend_serves_classify_on_executors(remote, texts):
     got = {r["text"]: r["classification"] for r in out.collect()}
     assert got == {t: CLASSES[(len(t) + 1) % 2] for t in TEXTS}
     assert len(api.jobs) >= 2
+
+
+def test_rank_with_elo_submits_each_ballot_once(remote, capsys):
+    # the Elo pair counts read the ranked frame once, so the model runs
+    # once per ballot: 200 prompts reach the server, not 400
+    so, api = remote
+    ratings = so.rank(RECORDS, LABELS, "clarity", run_elo=True)
+    assert "| elo" in capsys.readouterr().out
+    assert {r["label"] for r in ratings.collect()} == set(LABELS)
+    assert sum(len(job["inputs"]) for job in api.jobs.values()) == len(RECORDS)
+    # and a 200-row request is one partition: one remote job
+    assert len(api.jobs) == 1
+
+
+def test_small_infer_is_one_remote_job(remote):
+    so, api = remote
+    prompts = [r["a"] for r in RECORDS]
+    out = so.infer(prompts, output_column="out")
+    assert [r["out"] for r in out.collect()] == [reply(p, None) for p in prompts]
+    (job,) = api.jobs.values()
+    assert job["inputs"] == prompts
+
+
+def test_pairwise_counts_of_a_ranking_runs_its_model_once(spark, server):
+    base_url, _ = server
+    df = spark.createDataFrame(pd.DataFrame(RECORDS))
+    ranked = rank(df, LABELS, "clarity", backend=HttpBackend(base_url, "key", poll_interval=0))
+    plan = pairwise_counts(ranked)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Join" not in plan
 
 
 def test_run_function_hits_the_same_server(server):

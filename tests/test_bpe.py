@@ -329,3 +329,25 @@ def test_long_tokens_take_the_distributed_route(spark, monkeypatch):
     assert ckpt is not None
     ckpt.unpersist()
     assert distributed == merges and len(merges) == 5
+
+
+def test_distributed_rotations_do_not_nest_cached_plans(spark, monkeypatch):
+    # every 20-round rotation is rebuilt from the cached word table plus
+    # the merges so far, never from the rotation before it, and the
+    # result reads the word table: its plan holds one cached relation,
+    # however many rotations ran (61 merges here cross three)
+    import string
+
+    from sutro_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", -1)  # force distributed
+    word = string.ascii_letters + string.digits
+    df = _corpus(spark, f"{word} {word}")
+    seg = bpe.bpe_segment(df, rounds=100)
+    plan = seg._jdf.queryExecution().executedPlan().toString()
+    cached = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("InMemoryRelation")]
+    assert len(cached) == 1, plan
+    # the 61 merges fold the word into one symbol
+    ((w, subwords),) = [(r["w"], list(r["subwords"])) for r in seg.collect()]
+    assert (w, subwords) == (word, [word])
+    spark.catalog.clearCache()

@@ -74,6 +74,23 @@ def test_driver_built_plans_are_local_relations(spark):
     _assert_local(elo(ballots, "ranking"))
 
 
+def test_jobs_table_collects_without_a_spark_job(spark):
+    # a driver-built table is Spark's plain LocalRelation, with nothing
+    # above it that would need a job to scan
+    reg = JobRegistry(spark)
+    for i in range(8):
+        reg.jobs[f"job-{i}"] = Job(job_id=f"job-{i}", status=JobStatus.SUCCEEDED)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "jobs-table")
+    try:
+        rows = reg.jobs_table().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("jobs-table") == []
+    assert sorted(r["job_id"] for r in rows) == sorted(reg.jobs)
+
+
 def test_list_jobs_times_are_utc_on_a_non_utc_host(spark, monkeypatch):
     reg = JobRegistry(spark)
     noon = datetime(2024, 1, 1, 12, 0, tzinfo=timezone.utc)

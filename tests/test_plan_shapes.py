@@ -139,10 +139,11 @@ def test_quality_train_model_joins_are_broadcast(spark):
 
 
 def test_pairwise_counts_no_cartesian_self_join(spark):
-    # the ballot self-join must be an equi-join on the ballot id, never
-    # a cartesian pairing (was guarded via the rank_elo_large [Q] until
-    # its r8 retirement — the property belongs to the operator, so the
-    # guard now drives pairwise_counts directly at probe scale)
+    # labels are paired inside each ballot row by a second explode of
+    # its ranking, never by a cartesian pairing of ballots (was guarded
+    # via the rank_elo_large [Q] until its r8 retirement — the property
+    # belongs to the operator, so the guard drives pairwise_counts
+    # directly at probe scale)
     from pyspark.sql import functions as F
 
     from sutro_spark.operators.elo import pairwise_counts
