@@ -1,11 +1,10 @@
 """Inference backends for the ``llm_transform`` operator.
 
-The reference ships prompts over HTTPS to api.sutro.sh
-(/root/reference/sutro/sdk.py:216-254) and the server returns outputs
-positionally aligned. Here a backend is an object passed to
-``llm_transform`` and captured in its ``mapInPandas`` closure: Spark
-pickles it with the task and the executor calls it with an Arrow batch
-of prompts.
+The reference ships prompts over HTTPS to api.sutro.sh (sdk.py:216-254)
+and the server returns outputs positionally aligned. Here a backend is
+an object passed to ``llm_transform`` and captured in its
+``mapInPandas`` closure: Spark pickles it with the task and the
+executor calls it with an Arrow batch of prompts.
 
 Backends must be:
 
@@ -14,19 +13,27 @@ Backends must be:
   objects;
 - **idempotent** — Spark task retries mean a batch may run twice
   (reference analog: submissions are never retried, sdk.py:247-252;
-  our answer is determinism keyed on the prompt itself);
+  our answer is determinism keyed on the request itself);
 - **vectorized** — one call per Arrow batch, pandas in / pandas out.
 
 ``StubBackend`` is the default: a deterministic pure function of the
 prompt, designed so that every template pipeline (generate / extract /
 classify / score / rank / embed) is *expressible in ANSI SQL* and hence
 checkable against the DuckDB oracle (SURVEY.md §5).
+
+``HttpBackend`` runs each Arrow batch as one remote job (submit → poll
+→ fetch) named ``batch-<digest>``, a sha256 of the full request, so a
+re-run of the same batch carries the same name. Its retry budgets are
+the reference's, as module constants: ``MAX_RETRIES`` 524 retries per
+status poll (sdk.py:109) and ``FETCH_RETRIES`` results fetches
+``FETCH_INTERVAL_S`` apart (sdk.py:410-411).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
-from dataclasses import dataclass
+import time
 from typing import Protocol, runtime_checkable
 
 import numpy as np
@@ -144,64 +151,12 @@ class StubBackend:
         return vecs
 
 
-class RetryableError(Exception):
-    """Transient failure (the reference's 524-timeout class, sdk.py:109)."""
-
-
-@dataclass
-class RetryPolicy:
-    """Reference retry semantics (/root/reference/sutro/sdk.py:103-177,
-    407-425):
-
-    - idempotent requests: <= ``max_retries`` retries with exponential
-      1, 2, 4, ... second backoff on transient errors;
-    - non-idempotent submissions: NEVER retried (an ambiguous timeout
-      could have created the job — duplicate risk, sdk.py:247-252);
-    - results fetch: bounded linear retry (<= 20 x 5 s) for the
-      results-write race, via ``fetch_retries``/``fetch_interval``.
-
-    ``sleep`` is injectable for tests.
-    """
-
-    max_retries: int = 5
-    fetch_retries: int = 20
-    fetch_interval: float = 5.0
-    sleep: object = None
-
-    def _sleep(self, seconds: float) -> None:
-        import time as _time
-
-        (self.sleep or _time.sleep)(seconds)
-
-    def call(self, fn, *, idempotent: bool):
-        """Run ``fn`` under the retry budget. Non-idempotent calls get
-        exactly one attempt; transient errors propagate."""
-        attempts = self.max_retries + 1 if idempotent else 1
-        delay = 1.0
-        last: Exception | None = None
-        for attempt in range(attempts):
-            try:
-                return fn()
-            except RetryableError as e:
-                last = e
-                if attempt == attempts - 1:
-                    break
-                self._sleep(delay)
-                delay *= 2.0
-        raise last  # type: ignore[misc]
-
-    def fetch(self, fn):
-        """Bounded linear retry for eventually-consistent reads."""
-        last: Exception | None = None
-        for attempt in range(self.fetch_retries + 1):
-            try:
-                return fn()
-            except RetryableError as e:
-                last = e
-                if attempt == self.fetch_retries:
-                    break
-                self._sleep(self.fetch_interval)
-        raise last  # type: ignore[misc]
+#: 524 retries per idempotent GET, backed off 1, 2, 4, ... s (sdk.py:109).
+MAX_RETRIES = 5
+#: Results-fetch retries for the results-write race, FETCH_INTERVAL_S
+#: apart (sdk.py:410-411).
+FETCH_RETRIES = 20
+FETCH_INTERVAL_S = 5.0
 
 
 class HttpStatusError(Exception):
@@ -304,7 +259,8 @@ class HttpBackend:
     """Real-service backend: ships prompt batches to a sutro-style HTTP
     API and returns positionally aligned outputs.
 
-    Wire protocol mirrors the reference end to end:
+    Each Arrow batch is one remote job, as each reference request is
+    one job. The wire protocol mirrors the reference end to end:
 
     - submit: ``POST batch-inference`` with the reference payload shape
       (model, inputs, job_priority, json_schema, system_prompt,
@@ -312,34 +268,26 @@ class HttpBackend:
       truncate_rows, name, description — sdk.py:216-232), and
       ``max_retries=0``: a 524 is ambiguous about whether the job was
       created, so the submission is NEVER retried (sdk.py:247-252);
-    - poll: ``GET job-status/{job_id}`` (idempotent → 524-retried);
-    - results: ``POST job-results`` under the bounded linear
-      20 x 5 s retry for the results-write race (sdk.py:407-425);
+    - name: ``batch-<digest>``, the first 16 hex digits of a sha256
+      over the model, system prompt, schema, sampling params, seed
+      flag and every input. A Spark task retry or speculative attempt
+      of the same batch sends the same name, so a deduplicating server
+      can drop the copy; batches that differ in any input or parameter
+      never share one. 22 characters, within the reference's 45;
+    - poll: ``GET job-status/{job_id}`` every ``poll_interval`` s, each
+      GET retried on a 524 up to ``MAX_RETRIES`` times by
+      ``HttpClient.do_request``;
+    - results: ``POST job-results``, retried on any HTTP error up to
+      ``FETCH_RETRIES`` times ``FETCH_INTERVAL_S`` apart for the
+      results-write race (sdk.py:407-425);
     - alignment: the server returns ``outputs`` positionally aligned
       with ``inputs``; a length mismatch is a hard error, never a
       silent truncation.
 
-    The transport is injectable so the whole path is mock-testable
-    offline (tests/test_http_backend.py), exactly like the reference's
-    own suite patches requests.
-
-    Concurrency: by default one synchronous job per Arrow batch — on a
-    cluster that caps per-executor throughput at one in-flight request
-    per core while the task thread blocks on poll sleeps. Set
-    ``max_concurrency > 1`` to split each batch into sub-batches run
-    through a bounded thread pool INSIDE the task: each sub-batch is
-    its own submit→poll→fetch job honoring the full retry contract
-    (submit never retried, polls 524-retried, results under the linear
-    fetch retry), carries a deterministic idempotency name
-    ``batch-{digest}#part-{i}/{n}`` — the digest is a sha256 over this
-    call's input texts, so a deduplicating server can drop
-    double-submissions of the SAME sub-batch without ever colliding
-    with a different batch's parts — and outputs reassemble in input
-    order
-    (``ThreadPoolExecutor.map`` preserves order regardless of
-    completion order). The injected transport must be thread-safe —
-    ``RequestsTransport`` is; a failure in ANY sub-batch fails the
-    whole batch (no partial silently-missing rows).
+    ``sleep`` is the one clock for the 524 backoff, the poll interval
+    and the fetch retry. The transport is injectable so the whole path
+    is mock-testable offline (tests/test_http_backend.py), exactly like
+    the reference's own suite patches requests.
     """
 
     TERMINAL = frozenset({"SUCCEEDED", "FAILED", "CANCELLED"})
@@ -350,27 +298,14 @@ class HttpBackend:
         api_key: str = "",
         *,
         transport: Transport | None = None,
-        retry: RetryPolicy | None = None,
         poll_interval: float = 5.0,
         max_polls: int = 10_000,
         sleep=None,
-        max_concurrency: int = 1,
-        sub_batch_size: int | None = None,
     ):
-        self.retry = retry or RetryPolicy(sleep=sleep)
-        self.client = HttpClient(
-            base_url, api_key, transport=transport, sleep=self.retry._sleep
-        )
+        self.sleep = sleep if sleep is not None else time.sleep
+        self.client = HttpClient(base_url, api_key, transport=transport, sleep=self.sleep)
         self.poll_interval = poll_interval
         self.max_polls = max_polls
-        if max_concurrency < 1:
-            raise ValueError(f"max_concurrency must be >= 1, got {max_concurrency}")
-        if sub_batch_size is not None and sub_batch_size < 1:
-            raise ValueError(
-                f"sub_batch_size must be >= 1 or None, got {sub_batch_size}"
-            )
-        self.max_concurrency = max_concurrency
-        self.sub_batch_size = sub_batch_size
 
     # -- wire steps, each independently testable ------------------------
     def build_payload(
@@ -413,34 +348,36 @@ class HttpBackend:
         status = "PENDING"
         for _ in range(self.max_polls):
             body = self.client.do_request(
-                "GET", f"job-status/{job_id}", max_retries=self.retry.max_retries
+                "GET", f"job-status/{job_id}", max_retries=MAX_RETRIES
             )
             status = body["results"] if isinstance(body.get("results"), str) else body.get(
                 "results", {}
             ).get("status", "UNKNOWN")
             if status in self.TERMINAL:
                 return status
-            self.retry._sleep(self.poll_interval)
+            self.sleep(self.poll_interval)
         raise TimeoutError(f"job {job_id} not terminal after {self.max_polls} polls")
 
     def fetch_results(self, job_id: str, *, include_cumulative_logprobs: bool = True) -> dict:
-        def one_fetch():
-            try:
-                return self.client.do_request(
-                    "POST",
-                    "job-results",
-                    json={
-                        "job_id": job_id,
-                        "include_cumulative_logprobs": include_cumulative_logprobs,
-                    },
-                    max_retries=0,
-                )
-            except HttpStatusError as e:
-                # results-write race: job reports SUCCEEDED before the
-                # results land; retried linearly by RetryPolicy.fetch.
-                raise RetryableError(str(e)) from e
+        def fetch() -> dict:
+            return self.client.do_request(
+                "POST",
+                "job-results",
+                json={
+                    "job_id": job_id,
+                    "include_cumulative_logprobs": include_cumulative_logprobs,
+                },
+                max_retries=0,
+            )["results"]
 
-        return self.retry.fetch(one_fetch)["results"]
+        # results-write race: the job reports SUCCEEDED before its
+        # results land, so any HTTP error is retried linearly
+        for _ in range(FETCH_RETRIES):
+            try:
+                return fetch()
+            except HttpStatusError:
+                self.sleep(FETCH_INTERVAL_S)
+        return fetch()
 
     def _run_job(
         self,
@@ -451,10 +388,24 @@ class HttpBackend:
         output_schema: dict | None,
         sampling_params: dict | None,
         random_seed_per_input: bool,
-        name: str | None = None,
     ) -> tuple[list, list]:
         """One full submit→poll→fetch job; returns (outputs, logprobs)
         positionally aligned with ``inputs``."""
+        # the full request identity, not the texts alone: a server
+        # deduping on job name must never coalesce two jobs that share
+        # inputs but differ in parameters — they have different outputs
+        digest = hashlib.sha256(
+            "\x1f".join(
+                [
+                    model,
+                    system_prompt,
+                    repr(sorted((output_schema or {}).items())),
+                    repr(sorted((sampling_params or {}).items())),
+                    repr(random_seed_per_input),
+                ]
+                + [str(x) for x in inputs]
+            ).encode()
+        ).hexdigest()[:16]
         payload = self.build_payload(
             inputs,
             model=model,
@@ -462,7 +413,7 @@ class HttpBackend:
             output_schema=output_schema,
             sampling_params=sampling_params,
             random_seed_per_input=random_seed_per_input,
-            name=name,
+            name=f"batch-{digest}",
         )
         job_id = self.submit(payload)
         status = self.poll_until_done(job_id)
@@ -491,57 +442,14 @@ class HttpBackend:
         sampling_params: dict | None = None,
         random_seed_per_input: bool = False,
     ) -> pd.DataFrame:
-        inputs = prompts.fillna("").tolist()
-        kwargs = dict(
+        outputs, logprobs = self._run_job(
+            prompts.fillna("").tolist(),
             model=model,
             system_prompt=system_prompt,
             output_schema=output_schema,
             sampling_params=sampling_params,
             random_seed_per_input=random_seed_per_input,
         )
-        if (self.max_concurrency > 1 or self.sub_batch_size) and len(inputs) > 1:
-            import hashlib
-            import math
-            from concurrent.futures import ThreadPoolExecutor
-
-            size = self.sub_batch_size or math.ceil(
-                len(inputs) / self.max_concurrency
-            )
-            parts = [inputs[i : i + size] for i in range(0, len(inputs), size)]
-            # per-call content digest: identical names mark retries of the
-            # SAME sub-batch only — distinct batches (other Arrow batches,
-            # other executors) never share a name. The digest covers the
-            # full request identity (texts AND model/system_prompt/schema/
-            # sampling), not texts alone: a server deduping on job name
-            # must never coalesce two jobs that share inputs but differ
-            # in parameters — they have different outputs.
-            digest = hashlib.sha256(
-                "\x1f".join(
-                    [
-                        model,
-                        system_prompt,
-                        repr(sorted((output_schema or {}).items())),
-                        repr(sorted((sampling_params or {}).items())),
-                        repr(random_seed_per_input),
-                    ]
-                    + [str(x) for x in inputs]
-                ).encode()
-            ).hexdigest()[:16]
-            with ThreadPoolExecutor(self.max_concurrency) as pool:
-                done = list(
-                    pool.map(
-                        lambda ip: self._run_job(
-                            ip[1],
-                            name=f"batch-{digest}#part-{ip[0]}/{len(parts)}",
-                            **kwargs,
-                        ),
-                        enumerate(parts),
-                    )
-                )
-            outputs = [o for outs, _ in done for o in outs]
-            logprobs = [lp for _, lps in done for lp in lps]
-        else:
-            outputs, logprobs = self._run_job(inputs, **kwargs)
         out = pd.Series(outputs, index=prompts.index, dtype=object)
         lp = pd.Series(logprobs, index=prompts.index, dtype="float64")
         mask = prompts.isna()

@@ -87,8 +87,8 @@ class SutroSpark:
 
     def set_serving_base_url(self, serving_base_url: str) -> None:
         """Base URL for function-execution requests (reference
-        sdk.py:91-101); run_function routes through it when the HTTP
-        backend is active."""
+        sdk.py:91-101). Kept for API parity and has no effect: a
+        backend carries its own URL, so nothing reads this value."""
         self.serving_base_url = serving_base_url
 
     # --- core inference (reference: sdk.py:465-537) ----------------------

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import itertools
 import json
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -124,6 +125,22 @@ def test_http_backend_serves_infer_on_executors(remote, texts):
     # one wire job per non-empty partition, all seen by the server
     assert len(api.jobs) >= 2
     assert sorted(t for job in api.jobs.values() for t in job["inputs"]) == sorted(TEXTS)
+
+
+def test_each_batch_is_submitted_under_a_stable_name(remote, texts):
+    # a retried or speculative task re-sends its batch under the same
+    # name, so a deduplicating server can drop the copy
+    so, api = remote
+
+    def names_of_one_infer() -> list:
+        before = len(api.jobs)
+        so.infer(texts, column="text", output_column="out").collect()
+        return [job["name"] for job in list(api.jobs.values())[before:]]
+
+    first = names_of_one_infer()
+    assert len(first) == 3 and len(set(first)) == 3, first
+    assert all(re.fullmatch(r"batch-[0-9a-f]{16}", n) for n in first), first
+    assert sorted(names_of_one_infer()) == sorted(first)
 
 
 def test_http_backend_serves_classify_on_executors(remote, texts):

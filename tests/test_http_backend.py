@@ -6,14 +6,17 @@ fetch linearly retried, outputs positionally aligned."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 
 from sutro_spark.operators.backends import (
+    FETCH_INTERVAL_S,
+    FETCH_RETRIES,
     HttpBackend,
     HttpClient,
     HttpStatusError,
-    RetryPolicy,
 )
 
 
@@ -104,7 +107,7 @@ def test_results_fetch_linear_retry_on_write_race():
     res = b.fetch_results("job-1")
     assert res["outputs"] == ["a"]
     assert len(t.calls) == 3
-    assert log == [b.retry.fetch_interval] * 2  # linear, not exponential
+    assert log == [FETCH_INTERVAL_S] * 2  # linear, not exponential
 
 
 def test_generate_end_to_end_positional_alignment():
@@ -167,159 +170,106 @@ def test_generate_raises_on_failed_job():
         b.generate(pd.Series(["a"]), model="m")
 
 
-def test_retry_policy_shared_between_client_and_fetch():
-    b, _, _ = make_backend({}, retry=RetryPolicy(max_retries=2, fetch_retries=3))
-    assert b.retry.max_retries == 2
-    assert b.client._sleep.__self__ is b.retry  # one clock for all waits
+def test_one_sleep_clock_for_backoff_poll_and_fetch():
+    b, _, log = make_backend(
+        {
+            "batch-inference": [(200, {"results": "job-1"})],
+            "job-status": [
+                (524, {}),
+                (524, {}),
+                (200, {"results": "RUNNING"}),
+                (200, {"results": "SUCCEEDED"}),
+            ],
+            "job-results": [
+                (404, {}),
+                (200, {"results": {"outputs": ["o"], "cumulative_logprobs": [-0.1]}}),
+            ],
+        },
+        poll_interval=0.5,
+    )
+    out = b.generate(pd.Series(["p"]), model="m")
+    assert out["outputs"].tolist() == ["o"]
+    # 524 backoff, then the poll interval, then the fetch retry
+    assert log == [1, 2, 0.5, FETCH_INTERVAL_S]
+
+
+def test_fetch_results_gives_up_after_its_budget():
+    b, t, log = make_backend({"job-results": [(404, {})]})
+    with pytest.raises(HttpStatusError) as e:
+        b.fetch_results("job-1")
+    assert e.value.status_code == 404
+    assert len(t.calls) == FETCH_RETRIES + 1
+    assert log == [5.0] * 20
 
 
 class ConcurrentFakeTransport:
     """Thread-safe fake serving each submitted job its own inputs back
-    (output = 'OUT:' + input), with real per-request latency so tests
-    can MEASURE overlap, and optionally N injected 524s on each job's
-    first polls to prove the retry contract survives concurrency."""
+    (output = 'OUT:' + input) and recording every submitted name."""
 
-    def __init__(self, latency: float = 0.03, poll_524s: int = 0):
+    def __init__(self):
         import threading
 
         self.lock = threading.Lock()
         self.jobs: dict[str, list] = {}
         self.names: list = []
-        self.submits = 0
-        self.active = 0
-        self.max_active = 0
-        self.latency = latency
-        self.poll_524s = poll_524s
-        self.poll_fail_left: dict[str, int] = {}
 
     def request(self, method, url, *, headers, json=None):
-        import time
-
-        with self.lock:
-            self.active += 1
-            self.max_active = max(self.max_active, self.active)
-        try:
-            time.sleep(self.latency)
-            path = url.split("/", 3)[-1]
-            if path == "batch-inference":
-                with self.lock:
-                    jid = f"job-{len(self.jobs)}"
-                    self.jobs[jid] = list(json["inputs"])
-                    self.names.append(json.get("name"))
-                    self.submits += 1
-                    self.poll_fail_left[jid] = self.poll_524s
-                return 200, {"results": jid}
-            if path.startswith("job-status/"):
-                jid = path.split("/")[1]
-                with self.lock:
-                    if self.poll_fail_left.get(jid, 0) > 0:
-                        self.poll_fail_left[jid] -= 1
-                        return 524, {}
-                return 200, {"results": "SUCCEEDED"}
-            if path == "job-results":
-                ins = self.jobs[json["job_id"]]
-                return 200, {
-                    "results": {
-                        "outputs": [f"OUT:{x}" for x in ins],
-                        "cumulative_logprobs": [-float(len(x)) for x in ins],
-                    }
-                }
-            raise AssertionError(f"unexpected endpoint {path}")
-        finally:
+        path = url.split("/", 3)[-1]
+        if path == "batch-inference":
             with self.lock:
-                self.active -= 1
+                jid = f"job-{len(self.jobs)}"
+                self.jobs[jid] = list(json["inputs"])
+                self.names.append(json.get("name"))
+            return 200, {"results": jid}
+        if path.startswith("job-status/"):
+            return 200, {"results": "SUCCEEDED"}
+        if path == "job-results":
+            ins = self.jobs[json["job_id"]]
+            return 200, {
+                "results": {
+                    "outputs": [f"OUT:{x}" for x in ins],
+                    "cumulative_logprobs": [-float(len(x)) for x in ins],
+                }
+            }
+        raise AssertionError(f"unexpected endpoint {path}")
 
 
-def test_concurrent_sub_batches_overlap_and_preserve_order():
-    import time
+PROMPTS = [f"p{i:02d}" for i in range(8)]
+REQUEST = dict(
+    model="m",
+    system_prompt="sys",
+    output_schema={"type": "object", "properties": {"a": {"type": "string"}}},
+    sampling_params={"temperature": 0.2},
+    random_seed_per_input=False,
+)
 
-    prompts = pd.Series([f"p{i:02d}" for i in range(8)])
-    # serial baseline: 1 worker, same sub-batching -> 4 jobs x 3 calls
-    t0 = ConcurrentFakeTransport()
-    b0 = HttpBackend(
-        "https://api.example.test", "k", transport=t0, sleep=lambda s: None,
-        max_concurrency=1, sub_batch_size=2,
-    )
-    start = time.monotonic()
-    r0 = b0.generate(prompts, model="m")
-    serial = time.monotonic() - start
-    assert t0.max_active == 1
 
+def _submitted_names(prompts=PROMPTS, **changes) -> list:
     t = ConcurrentFakeTransport()
-    b = HttpBackend(
-        "https://api.example.test", "k", transport=t, sleep=lambda s: None,
-        max_concurrency=4, sub_batch_size=2,
-    )
-    start = time.monotonic()
-    r = b.generate(prompts, model="m")
-    concurrent = time.monotonic() - start
-    # genuine overlap: >=2 requests in flight at once, >=2x faster
-    assert t.max_active >= 2
-    assert concurrent < serial / 2, (serial, concurrent)
-    # ordered reassembly: output i belongs to prompt i, exactly
-    assert list(r["outputs"]) == [f"OUT:p{i:02d}" for i in range(8)]
-    assert list(r["outputs"]) == list(r0["outputs"])
-    assert list(r["cumulative_logprobs"]) == list(r0["cumulative_logprobs"])
-    # one submit per sub-batch with a deterministic idempotency name:
-    # same call (same inputs) -> identical names both runs, and the
-    # digest base distinguishes this batch from any other batch's parts
-    assert t.submits == 4
-    import re
-
-    # the thread pool may SUBMIT parts in any order — sort by part
-    # index before checking; what must be deterministic is the NAME
-    # each part carries, not the wall-clock submission order
-    by_part = sorted(t.names, key=lambda n: n.rsplit("#part-", 1)[-1])
-    assert all(
-        re.fullmatch(rf"batch-[0-9a-f]{{16}}#part-{i}/4", n)
-        for i, n in enumerate(by_part)
-    ), t.names
-    assert sorted(t.names) == sorted(t0.names)  # retry of same inputs dedups
-    t_other = ConcurrentFakeTransport()
-    b_other = HttpBackend(
-        "https://api.example.test", "k", transport=t_other,
-        sleep=lambda s: None, max_concurrency=4, sub_batch_size=2,
-    )
-    b_other.generate(pd.Series([f"z{i:02d}" for i in range(8)]), model="m")
-    assert set(t_other.names).isdisjoint(t.names)  # distinct batches never collide
-    # same TEXTS but different parameters are a different request
-    # identity: a name-deduping server must not coalesce them
-    t_model = ConcurrentFakeTransport()
-    HttpBackend(
-        "https://api.example.test", "k", transport=t_model,
-        sleep=lambda s: None, max_concurrency=4, sub_batch_size=2,
-    ).generate(prompts, model="m2")
-    assert set(t_model.names).isdisjoint(t.names)
-    t_samp = ConcurrentFakeTransport()
-    HttpBackend(
-        "https://api.example.test", "k", transport=t_samp,
-        sleep=lambda s: None, max_concurrency=4, sub_batch_size=2,
-    ).generate(prompts, model="m", sampling_params={"temperature": 0.7})
-    assert set(t_samp.names).isdisjoint(t.names)
+    b = HttpBackend("https://api.example.test", "k", transport=t, sleep=lambda s: None)
+    out = b.generate(pd.Series(prompts), **{**REQUEST, **changes})
+    assert out["outputs"].tolist() == [f"OUT:{p}" for p in prompts]
+    return t.names
 
 
-def test_concurrent_order_preserved_under_injected_524s():
-    prompts = pd.Series([f"q{i}" for i in range(6)])
-    t = ConcurrentFakeTransport(latency=0.005, poll_524s=2)
-    b = HttpBackend(
-        "https://api.example.test", "k", transport=t, sleep=lambda s: None,
-        max_concurrency=3, sub_batch_size=2,
-    )
-    r = b.generate(prompts, model="m")
-    assert list(r["outputs"]) == [f"OUT:q{i}" for i in range(6)]
-    # every job really absorbed its two 524s through the retry path
-    assert t.poll_fail_left == {f"job-{i}": 0 for i in range(3)}
-    # and submits were never retried: exactly one per sub-batch
-    assert t.submits == 3
+def test_generate_is_one_job_with_a_deterministic_name():
+    (name,) = _submitted_names()  # 8 prompts, exactly one submit
+    assert re.fullmatch(r"batch-[0-9a-f]{16}", name), name
+    # a second backend (a retried or speculative task) sends the same name
+    assert _submitted_names() == [name]
 
 
-def test_concurrency_validation():
-    with pytest.raises(ValueError):
-        HttpBackend("https://x", transport=FakeTransport({}), max_concurrency=0)
-    # sub_batch_size=0 must not silently disable sub-batching, and
-    # negatives must not surface as a confusing pandas length error
-    for bad in (0, -2):
-        with pytest.raises(ValueError):
-            HttpBackend(
-                "https://x", transport=FakeTransport({}), sub_batch_size=bad
-            )
+@pytest.mark.parametrize(
+    "changes",
+    [
+        {"prompts": PROMPTS[:-1] + ["p99"]},
+        {"model": "m2"},
+        {"system_prompt": "other"},
+        {"output_schema": None},
+        {"sampling_params": {"temperature": 0.7}},
+        {"random_seed_per_input": True},
+    ],
+    ids=lambda c: next(iter(c)),
+)
+def test_any_change_to_the_request_changes_the_name(changes):
+    assert _submitted_names(**changes) != _submitted_names()
