@@ -1,11 +1,12 @@
 """CLI over the engine (SURVEY.md §3.3; reference: /root/reference/sutro/cli.py).
 
 Commands mirror the reference's surface: jobs {list,status,results,
-cancel}, datasets {create,list,upload,download}, cache {show,clear},
-quotas — operating on the local JobRegistry + warehouse paths instead
-of a remote API. The jobs-list rendering pipeline (null filter, sort
-desc, date/tz format, fill nulls, currency format, limit 25) is the
-same relational shape checked by the ``top_orders`` driver query.
+cancel,attach}, datasets {create,list,upload,download}, cache
+{show,clear}, quotas — operating on the local results cache and
+warehouse paths instead of a remote API. The jobs-list rendering
+pipeline (null filter, sort desc, date/tz format, fill nulls, currency
+format, limit 25) is the same relational shape checked by the
+``top_orders`` driver query.
 """
 
 from __future__ import annotations
@@ -151,60 +152,51 @@ def set_base_url(base_url: str) -> str:
     return save_config(cfg.get("api_key", ""), base_url)
 
 
-def _cli_registry():
-    from sutro_spark.plans.jobs import JobRegistry
-    from sutro_spark.session import get_spark
+def _succeeded(job_id: str) -> bool:
+    """Whether the results cache holds the job's complete results. A job
+    lives in the registry of the process that submitted it; this is the
+    only job state that outlives that process, only a succeeded job
+    leaves it, and reading it starts no Spark session."""
+    from sutro_spark.operators.results import cache_path, is_complete
 
-    return JobRegistry(get_spark("cli", cpus=4))
+    return is_complete(cache_path(job_id))
 
 
 def jobs_status(job_id: str) -> str:
-    """``jobs status`` (reference cli.py:204-214). Jobs live in a
-    per-session registry; a job unknown to this process but with a
-    complete results directory in the cache reports SUCCEEDED (failed
-    and cancelled jobs leave none)."""
-    from sutro_spark.operators.results import cache_path, is_complete
-    from sutro_spark.plans.jobs import JobStatus
-
-    status = _cli_registry().get_job_status(job_id)
-    if status is JobStatus.UNKNOWN and is_complete(cache_path(job_id)):
-        return JobStatus.SUCCEEDED.value
-    return status.value
+    """``jobs status`` (reference cli.py:204-214): SUCCEEDED or UNKNOWN,
+    from the results cache."""
+    return "SUCCEEDED" if _succeeded(job_id) else "UNKNOWN"
 
 
 def jobs_attach(job_id: str | None, *, latest: bool = False) -> int:
-    """``jobs attach [job_id] [--latest]`` (reference cli.py:419-435):
-    ``--latest`` picks the newest job from the registry table; no id and
-    no flag is a usage message. Jobs live in a per-session registry, so
-    a job from another process is resolved via the results cache and
-    reported as already completed (only a succeeded job leaves a
-    complete results directory), matching the reference's done-job
-    short-circuit (sdk.py:873-879)."""
-    from sutro_spark.operators.results import cache_path, is_complete
-    from sutro_spark.plans.jobs import JobStatus
-    from sutro_spark.sdk import SutroSpark
-    from sutro_spark.session import get_spark
-
-    reg = _cli_registry()
+    """``jobs attach [job_id] [--latest]`` (reference cli.py:419-435),
+    from the results cache. ``--latest`` picks the newest job of the
+    jobs list, which holds only the jobs its own process submitted, so
+    the CLI's is always empty; no id and no flag is a usage message. A
+    job with complete results is reported as already completed, the
+    reference's done-job short-circuit (sdk.py:873-879)."""
     if latest:
-        rows = format_jobs_table(reg.jobs_table(), limit=1).collect()
-        if not rows:
-            print("No jobs found.")
-            return 1
-        job_id = rows[0]["job_id"]
-        print(f"Attaching to latest job: {job_id}")
-    elif not job_id:
+        print("No jobs found.")
+        return 1
+    if not job_id:
         print("No job ID provided.")
         return 1
-    if reg.get_job_status(job_id) is JobStatus.UNKNOWN and is_complete(cache_path(job_id)):
-        print(
-            "Job already completed. You can obtain the results with"
-            f" `sutro jobs results {job_id}`"
-        )
-        return 0
-    so = SutroSpark(get_spark("cli", cpus=4))
-    so.registry = reg
-    return 0 if so.attach(job_id) is not None else 1
+    if not _succeeded(job_id):
+        print(f"Job {job_id} not found")
+        return 1
+    print(
+        "Job already completed. You can obtain the results with"
+        f" `sutro jobs results {job_id}`"
+    )
+    return 0
+
+
+def jobs_cancel(job_id: str) -> int:
+    """``jobs cancel`` (reference cli.py:264-276). Only the process
+    running a job can cancel it; from the results cache an id is unknown
+    or a succeeded job, past cancelling. Either way it exits 1."""
+    print("Job is in succeeded state." if _succeeded(job_id) else f"Job {job_id} not found")
+    return 1
 
 
 def jobs_results(
@@ -222,11 +214,11 @@ def jobs_results(
     stored schema), read through a fresh facade, with an optional
     parquet/csv save named after the job id; None when the cache holds
     no complete results for the id."""
-    from sutro_spark.operators.results import cache_path, is_complete, save_results
+    from sutro_spark.operators.results import save_results
     from sutro_spark.sdk import SutroSpark
     from sutro_spark.session import get_spark
 
-    if not is_complete(cache_path(job_id)):
+    if not _succeeded(job_id):
         return None
     res = SutroSpark(get_spark("cli", cpus=4)).get_job_results(
         job_id,
@@ -341,16 +333,18 @@ def main(argv: list[str] | None = None) -> int:
             if args.save:
                 print(f"Results saved to {args.job_id}.{args.save_format}")
         elif args.jobs_cmd == "cancel":
-            _cli_registry().cancel_job(args.job_id)
-            print("Job cancelled successfully.")
+            return jobs_cancel(args.job_id)
         elif args.jobs_cmd == "attach":
             return jobs_attach(args.job_id, latest=args.latest)
         else:
-            # jobs live in a per-session registry; the CLI shows an
-            # empty table when no session is running (local engine).
-            reg = _cli_registry()
+            # jobs live in their own process's registry, so a new one
+            # lists none: the CLI shows the reference's table, empty
+            from sutro_spark.plans.jobs import JobRegistry
+            from sutro_spark.session import get_spark
+
             format_jobs_table(
-                reg.jobs_table(), limit=None if getattr(args, "all", False) else 25
+                JobRegistry(get_spark("cli", cpus=4)).jobs_table(),
+                limit=None if args.all else 25,
             ).show(truncate=False)
     return 0
 

@@ -6,24 +6,27 @@ class, a status FSM, token/cost counters and timestamps; clients submit,
 poll status every 5 s (timeout 7200 s), stream progress, cancel, and
 check per-priority quotas.
 
-Spark mapping: a driver-side registry backed by a plain dict (exposed
-as a DataFrame for relational queries); execution is an async Spark
-action tagged with a job group so ``cancel`` maps to
-``sc.cancelJobGroup``; priorities map to FAIR scheduler pools.
+Spark mapping: a driver-side registry backed by one dict of job
+records (exposed as a DataFrame for relational queries); execution is
+an async Spark action on the job's own thread, tagged with a job group
+so ``cancel`` maps to ``sc.cancelJobGroup``; priorities map to FAIR
+scheduler pools. The thread makes the job's terminal transition under
+the registry's lock before it exits, so waiting for a job is joining
+its thread.
 
 One materialization per job: the job's only action writes its plan to
 the parquet results cache (``cache_path(job_id)``, the reference's
 per-job parquet, sdk.py:1233), with the row count riding that write as
 an observed metric. The registry keeps the path and the schema written
-there, never a DataFrame, and every results fetch is a read of that file
-with that schema, so no fetch runs a job to infer it from the footer.
+there, never a DataFrame; ``SutroSpark.get_job_results`` reads that
+file with that schema, so no fetch runs a job to infer it from the
+footer.
 """
 
 from __future__ import annotations
 
 import shutil
 import threading
-import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -33,12 +36,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from sutro_spark.operators.results import cache_path
+from sutro_spark.operators.results import cache_path, write_result_cache
 from sutro_spark.sources.ingest import local_frame
 
 MAX_NAME_LEN = 45  # sdk.py:38
 MAX_DESCRIPTION_LEN = 512  # sdk.py:39
-POLL_INTERVAL_S = 5.0  # sdk.py:1664
 DEFAULT_TIMEOUT_S = 7200.0  # sdk.py:1646
 
 
@@ -79,6 +81,10 @@ class Job:
         default_factory=lambda: datetime.now(timezone.utc)
     )
     datetime_completed: datetime | None = None
+    # the thread running the job's write, and the rows-completed
+    # accumulator its transform reports to (C5)
+    thread: threading.Thread | None = field(default=None, repr=False, compare=False)
+    progress: object = field(default=None, repr=False, compare=False)
 
 
 @dataclass
@@ -98,8 +104,6 @@ class JobRegistry:
         self.spark = spark
         self.jobs: dict[str, Job] = {}
         self.quotas = quotas or dict(DEFAULT_QUOTAS)
-        self._threads: dict[str, threading.Thread] = {}
-        self._progress: dict[str, object] = {}  # job_id → accumulator
         self._lock = threading.Lock()
 
     def make_progress_accumulator(self):
@@ -116,7 +120,6 @@ class JobRegistry:
         description: str | None = None,
         model: str = "stub-echo",
         priority: int = 0,
-        rows_total: int | None = None,
         progress_accumulator=None,
     ) -> str:
         """Validate, register, and launch the plan as an async write of
@@ -139,37 +142,40 @@ class JobRegistry:
             description=description,
             model=model,
             priority=priority,
-            rows_total=rows_total or 0,
+            status=JobStatus.STARTING,
             results_path=cache_path(job_id),
             schema=df.schema,
+            progress=progress_accumulator,
         )
-        with self._lock:
-            self.jobs[job_id] = job
-            if progress_accumulator is not None:
-                self._progress[job_id] = progress_accumulator
 
         def run() -> None:
-            sc = self.spark.sparkContext
-            sc.setJobGroup(job_id, name or job_id, interruptOnCancel=True)
-            # C9: priority classes → FAIR scheduler pools
-            sc.setLocalProperty(
-                "spark.scheduler.pool", "production" if priority == 1 else "prototyping"
-            )
-            job.status = JobStatus.RUNNING
+            # A cancel that landed before this thread ran ends the job
+            # here, unwritten; a later one cancels the job group.
+            with self._lock:
+                started = job.status is not JobStatus.CANCELLING
+                if started:
+                    job.status = JobStatus.RUNNING
             error = None
-            try:
-                obs = Observation()
-                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                    "overwrite"
-                ).parquet(job.results_path)
-                job.rows_completed = obs.get["rows"]
-                job.rows_total = job.rows_total or job.rows_completed
-            except Exception as e:  # noqa: BLE001 - failure_reason capture (C12)
-                error = str(e)[:500]
-            # Terminal transition under the lock: a cancel_job() racing
-            # in after the write must win (CANCELLING → CANCELLED, never
-            # SUCCEEDED), and the partial directory is gone before the
-            # terminal status is visible.
+            if started:
+                try:
+                    sc = self.spark.sparkContext
+                    sc.setJobGroup(job_id, name or job_id, interruptOnCancel=True)
+                    # C9: priority classes → FAIR scheduler pools
+                    sc.setLocalProperty(
+                        "spark.scheduler.pool",
+                        "production" if priority == 1 else "prototyping",
+                    )
+                    obs = Observation()
+                    write_result_cache(
+                        df.observe(obs, F.count(F.lit(1)).alias("rows")), job_id
+                    )
+                    job.rows_completed = job.rows_total = obs.get["rows"]
+                except Exception as e:  # noqa: BLE001 - failure_reason capture (C12)
+                    error = str(e)[:500]
+            # Terminal transition under the lock, the thread's last act: a
+            # cancel_job() racing in after the write must win (CANCELLING →
+            # CANCELLED, never SUCCEEDED), and the partial directory is
+            # gone before the terminal status is visible.
             with self._lock:
                 job.datetime_completed = datetime.now(timezone.utc)
                 if job.status == JobStatus.CANCELLING or error is not None:
@@ -182,10 +188,10 @@ class JobRegistry:
                 else:
                     job.status = JobStatus.SUCCEEDED
 
-        job.status = JobStatus.STARTING
-        t = threading.Thread(target=run, name=job_id, daemon=True)
-        self._threads[job_id] = t
-        t.start()
+        job.thread = threading.Thread(target=run, name=job_id, daemon=True)
+        with self._lock:
+            self.jobs[job_id] = job
+        job.thread.start()
         return job_id
 
     # --- C8: quotas pre-check --------------------------------------------
@@ -203,7 +209,7 @@ class JobRegistry:
         job = self.jobs.get(job_id)
         if job is None:
             return JobStatus.UNKNOWN
-        acc = self._progress.get(job_id)
+        acc = job.progress
         if acc is not None and job.status is JobStatus.RUNNING:
             # live rows-completed with the monotonic-max rule (A5:
             # never move progress backwards on late/dup updates)
@@ -215,35 +221,21 @@ class JobRegistry:
         job = self.jobs.get(job_id)
         return job.failure_reason if job else None
 
-    # --- C3: poll-await ---------------------------------------------------
+    # --- C3: await -------------------------------------------------------
     def await_job_completion(
-        self,
-        job_id: str,
-        timeout: float = DEFAULT_TIMEOUT_S,
-        poll_interval: float = POLL_INTERVAL_S,
-    ) -> DataFrame | None:
-        """Poll until terminal status or timeout (reference defaults:
-        5 s poll, 7200 s timeout; sdk.py:1643-1718)."""
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            status = self.get_job_status(job_id)
-            if status.is_terminal:
-                return self.get_job_results(job_id)
-            # local threads finish fast; poll finely but honor the contract
-            self._threads[job_id].join(timeout=min(poll_interval, 0.05))
-            if not self._threads[job_id].is_alive():
-                continue
-        raise TimeoutError(f"job {job_id} did not complete within {timeout}s")
-
-    # --- C4: await start --------------------------------------------------
-    def await_job_start(self, job_id: str, timeout: float = 60.0) -> JobStatus:
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            status = self.get_job_status(job_id)
-            if status in (JobStatus.RUNNING, JobStatus.STARTING) or status.is_terminal:
-                return status
-            time.sleep(0.02)
-        raise TimeoutError(f"job {job_id} did not start within {timeout}s")
+        self, job_id: str, timeout: float = DEFAULT_TIMEOUT_S
+    ) -> JobStatus:
+        """Wait up to ``timeout`` s (the reference's 7200 s default,
+        sdk.py:1643-1718) for the job's thread, and return the terminal
+        status it set before exiting; UNKNOWN, at once, for an id this
+        registry does not know."""
+        job = self.jobs.get(job_id)
+        if job is None:
+            return JobStatus.UNKNOWN
+        job.thread.join(timeout)
+        if job.thread.is_alive():
+            raise TimeoutError(f"job {job_id} did not complete within {timeout}s")
+        return job.status
 
     # --- C7: cancel -------------------------------------------------------
     def cancel_job(self, job_id: str) -> None:
@@ -291,12 +283,3 @@ class JobRegistry:
         if job is None:
             return cache_path(job_id), None, None
         return job.results_path, job.schema, job.rows_total
-
-    def get_job_results(self, job_id: str) -> DataFrame | None:
-        """The succeeded job's parquet results, read fresh with the
-        schema the job wrote (None for a job that is unknown or did not
-        succeed)."""
-        job = self.jobs.get(job_id)
-        if job is None or job.status is not JobStatus.SUCCEEDED:
-            return None
-        return self.spark.read.schema(job.schema).parquet(job.results_path)

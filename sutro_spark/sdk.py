@@ -158,20 +158,16 @@ class SutroSpark:
         )
 
     def _finalize_results(self, job_id, output_column, *, unpack_json=True, show_preview=False):
-        if self.registry.await_job_completion(job_id) is None:
+        status = self.registry.await_job_completion(job_id)
+        if status is not JobStatus.SUCCEEDED:
+            reason = self.registry.get_failure_reason(job_id)
             raise RuntimeError(
-                f"job {job_id} failed: {self.registry.get_failure_reason(job_id)}"
+                f"job {job_id} {status.value.lower()}" + (f": {reason}" if reason else "")
             )
         res = self.get_job_results(job_id, output_column, unpack_json=unpack_json)
         if show_preview:
-            # the attached-run preview print (reference sdk.py:437-459);
-            # here `res` already carries the input columns structurally
-            res.show(10, truncate=48)
-            print(
-                "✔ Displaying result preview. You can join the results on the"
-                f" original dataframe with `so.get_job_results('{job_id}',"
-                " with_original_df=<original_df>)`"
-            )
+            # `res` already carries the input columns structurally
+            self._print_preview(job_id, res, 10, joined=True)
         return res
 
     # --- templates (reference: templates/*) ------------------------------
@@ -220,12 +216,11 @@ class SutroSpark:
     def cancel_job(self, job_id: str) -> None:
         self.registry.cancel_job(job_id)
 
-    def await_job_completion(self, job_id: str, timeout: float = 7200.0, **kw):
+    def await_job_completion(self, job_id: str, timeout: float = 7200.0):
         """Wait for the job; its :meth:`get_job_results` view on success,
-        None when it failed or was cancelled."""
-        if self.registry.await_job_completion(job_id, timeout=timeout, **kw) is None:
-            return None
-        return self.get_job_results(job_id)
+        None when it failed, was cancelled or is unknown here."""
+        status = self.registry.await_job_completion(job_id, timeout=timeout)
+        return self.get_job_results(job_id) if status is JobStatus.SUCCEEDED else None
 
     def attach(
         self,
@@ -237,55 +232,48 @@ class SutroSpark:
     ):
         """Re-attach to a job and wait (reference: sdk.py:852-965).
 
-        Terminal jobs short-circuit with the reference's messages; a
-        live job is awaited. On success the results are merged onto
+        A live job is awaited. On success the results are merged onto
         ``original_df`` (when given) and a preview is printed — the
         attached-run preview join of sdk.py:437-459 — and the job id is
-        returned. Failures return None.
+        returned; the reference can't re-stream a done job's progress
+        and points at `jobs results` instead (sdk.py:873-879). An
+        unknown, failed or cancelled job prints the reference's message
+        and the failure reason, if any, and returns None.
         """
-        status = self.registry.get_job_status(job_id)
+        status = self.registry.await_job_completion(job_id)
         if status is JobStatus.UNKNOWN:
             if not quiet:
                 print(f"Job {job_id} not found")
             return None
-        if status is JobStatus.SUCCEEDED:
-            # the reference can't re-stream a done job's progress; it
-            # points at `jobs results` instead (sdk.py:873-879). The
-            # local engine still surfaces the preview join.
-            return self._show_preview(
-                job_id, original_df, output_column, preview_rows, quiet
-            )
-        if status.is_terminal:
+        if status is not JobStatus.SUCCEEDED:
             if not quiet:
                 print(f"Job is in {status.value.lower()} state.")
+                reason = self.registry.get_failure_reason(job_id)
+                if reason:
+                    print(f"Failure reason: {reason}")
             return None
-        res = self.registry.await_job_completion(job_id)
-        if res is None:
-            if not quiet:
-                print(f"Failure reason: {self.registry.get_failure_reason(job_id)}")
-            return None
-        return self._show_preview(job_id, original_df, output_column, preview_rows, quiet)
-
-    def _show_preview(self, job_id, original_df, output_column, preview_rows, quiet):
-        """The attached-run result preview (reference sdk.py:437-459):
-        outputs merged onto the original frame, printed, job id back."""
         preview = self.get_job_results(
             job_id, output_column=output_column, with_original_df=original_df
         )
         if not quiet:
-            preview.show(preview_rows, truncate=48)
-            if original_df is not None:
-                print(
-                    "✔ Displaying result preview. You can join the results on the"
-                    f" original dataframe with `so.get_job_results('{job_id}',"
-                    " with_original_df=<original_df>)`"
-                )
-            else:
-                print(
-                    "✔ Job results received. You can re-obtain the results with"
-                    f" `so.get_job_results('{job_id}')`"
-                )
+            self._print_preview(job_id, preview, preview_rows, joined=original_df is not None)
         return job_id
+
+    @staticmethod
+    def _print_preview(job_id, res, rows, *, joined):
+        """The attached-run result preview (reference sdk.py:437-459)."""
+        res.show(rows, truncate=48)
+        if joined:
+            print(
+                "✔ Displaying result preview. You can join the results on the"
+                f" original dataframe with `so.get_job_results('{job_id}',"
+                " with_original_df=<original_df>)`"
+            )
+        else:
+            print(
+                "✔ Job results received. You can re-obtain the results with"
+                f" `so.get_job_results('{job_id}')`"
+            )
 
     def get_job_results(
         self,

@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from sutro_spark.cli import jobs_results, jobs_status, login, main, set_base_url
+from sutro_spark.cli import jobs_attach, jobs_results, jobs_status, login, main, set_base_url
 
 
 @pytest.fixture()
@@ -145,3 +145,45 @@ def test_jobs_attach_cached_job_short_circuits(spark, documents, isolated_cache,
 def test_jobs_attach_latest_empty_registry(capsys):
     assert main(["jobs", "attach", "--latest"]) == 1
     assert "No jobs found" in capsys.readouterr().out
+
+
+@pytest.fixture()
+def no_spark(monkeypatch):
+    """Make any attempt to start a Spark session fail."""
+    import sutro_spark.session
+
+    def refuse(*a, **kw):
+        raise AssertionError("the command started a Spark session")
+
+    monkeypatch.setattr(sutro_spark.session, "get_spark", refuse)
+
+
+def test_job_commands_answer_from_the_cache_without_spark(
+    spark, documents, isolated_cache, capsys, request
+):
+    from sutro_spark.operators.results import write_result_cache
+
+    write_result_cache(documents.limit(2), "job-cli-done")
+    request.getfixturevalue("no_spark")
+    assert jobs_status("job-cli-done") == "SUCCEEDED"
+    assert jobs_status("job-cli-none") == "UNKNOWN"
+    assert jobs_attach("job-cli-done") == 0
+    assert "already completed" in capsys.readouterr().out
+    assert jobs_attach("job-cli-none") == 1
+    assert capsys.readouterr().out == "Job job-cli-none not found\n"
+    assert jobs_attach(None, latest=True) == 1
+    assert capsys.readouterr().out == "No jobs found.\n"
+    assert main(["jobs", "cancel", "job-cli-none"]) == 1
+    assert capsys.readouterr().out == "Job job-cli-none not found\n"
+
+
+def test_jobs_cancel_reports_what_it_cannot_cancel(spark, documents, isolated_cache, capsys):
+    from sutro_spark.operators.results import write_result_cache
+
+    # no complete results: not a job this command can know
+    assert main(["jobs", "cancel", "job-cli-ghost"]) == 1
+    assert capsys.readouterr().out == "Job job-cli-ghost not found\n"
+    # complete results: the job succeeded, past cancelling
+    write_result_cache(documents.limit(2), "job-cli-done")
+    assert main(["jobs", "cancel", "job-cli-done"]) == 1
+    assert capsys.readouterr().out == "Job is in succeeded state.\n"

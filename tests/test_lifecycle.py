@@ -22,10 +22,10 @@ def test_job_submit_await_results(spark, documents):
     reg = JobRegistry(spark)
     out = llm_transform(documents, "text")
     job_id = reg.submit(out, name="test-job", model="stub-echo")
-    res = reg.await_job_completion(job_id, timeout=120)
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.SUCCEEDED
     assert reg.get_job_status(job_id) is JobStatus.SUCCEEDED
-    assert res is not None and res.count() == documents.count()
     job = reg.jobs[job_id]
+    assert job.rows_total == documents.count()
     assert job.rows_completed == documents.count()
     assert job.datetime_completed is not None
 
@@ -36,9 +36,9 @@ def test_job_durable_materialization_and_progress(spark, documents, tmp_path, mo
     acc = reg.make_progress_accumulator()
     out = llm_transform(documents, "text", progress_accumulator=acc)
     job_id = reg.submit(out, name="durable", progress_accumulator=acc)
-    res = reg.await_job_completion(job_id, timeout=120)
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.SUCCEEDED
     n = documents.count()
-    assert res.count() == n
+    assert reg.jobs[job_id].rows_completed == n
     assert acc.value >= n  # every batch reported progress
     # durable: results live in the parquet cache, not executor memory
     from sutro_spark.operators.results import cache_path
@@ -56,7 +56,7 @@ def test_job_validation_and_failure(spark, documents):
     # a plan that fails at execution time → FAILED with a reason
     bad = documents.withColumn("boom", F.expr("raise_error('kaboom')"))
     job_id = reg.submit(bad, name="failing")
-    assert reg.await_job_completion(job_id, timeout=120) is None
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.FAILED
     assert reg.get_job_status(job_id) is JobStatus.FAILED
     assert "kaboom" in (reg.get_failure_reason(job_id) or "")
 
@@ -66,14 +66,18 @@ def test_failed_job_leaves_no_results(spark, documents, tmp_path, monkeypatch):
 
     from sutro_spark.cli import jobs_status
     from sutro_spark.operators.results import cache_path
+    from sutro_spark.sdk import SutroSpark
 
     monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
-    reg = JobRegistry(spark)
+    so = SutroSpark(spark)
+    reg = so.registry
     bad = documents.withColumn("boom", F.expr("raise_error('kaboom')"))
     job_id = reg.submit(bad, name="failing")
-    assert reg.await_job_completion(job_id, timeout=120) is None
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.FAILED
     assert reg.get_job_status(job_id) is JobStatus.FAILED
-    assert reg.get_job_results(job_id) is None
+    assert so.await_job_completion(job_id) is None
+    with pytest.raises(ValueError, match="no results"):
+        so.get_job_results(job_id)
     # the partial write is removed, so a fresh registry cannot take the
     # job for a succeeded one
     assert not os.path.exists(cache_path(job_id))
@@ -96,9 +100,56 @@ def test_cancelled_job_leaves_no_results(spark, documents, tmp_path, monkeypatch
         time.sleep(0.05)
     time.sleep(1.0)  # inside the first row's sleep
     reg.cancel_job(job_id)
-    assert reg.await_job_completion(job_id, timeout=120) is None
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.CANCELLED
     assert reg.get_job_status(job_id) is JobStatus.CANCELLED
     assert not os.path.exists(cache_path(job_id))
+
+
+def test_cancel_before_the_job_thread_runs_ends_unwritten(
+    spark, documents, tmp_path, monkeypatch
+):
+    # hold the job thread's start back until cancel_job has run: the
+    # thread must see CANCELLING and end the job without writing
+    import os
+    import threading
+
+    from sutro_spark.operators.results import cache_path
+
+    held = []
+    start = threading.Thread.start
+
+    class HeldThread(threading.Thread):
+        def start(self):
+            if self.name.startswith("job-"):
+                held.append(self)
+            else:
+                start(self)
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    monkeypatch.setattr(threading, "Thread", HeldThread)
+    reg = JobRegistry(spark)
+    job_id = reg.submit(documents.limit(3), name="held")
+    assert [t.name for t in held] == [job_id]
+    assert reg.get_job_status(job_id) is JobStatus.STARTING
+    reg.cancel_job(job_id)
+    assert reg.get_job_status(job_id) is JobStatus.CANCELLING
+    start(held[0])
+    held[0].join(120)
+    assert not held[0].is_alive()
+    assert reg.get_job_status(job_id) is JobStatus.CANCELLED
+    assert not os.path.exists(cache_path(job_id))
+    assert reg.jobs[job_id].rows_completed == 0
+    assert reg.await_job_completion(job_id, timeout=120) is JobStatus.CANCELLED
+
+
+def test_awaiting_an_unknown_job_returns_at_once(spark):
+    from sutro_spark.sdk import SutroSpark
+
+    so = SutroSpark(spark)
+    t0 = time.perf_counter()
+    assert so.registry.await_job_completion("job-nope", timeout=60) is JobStatus.UNKNOWN
+    assert so.await_job_completion("job-nope", timeout=60) is None
+    assert time.perf_counter() - t0 < 5
 
 
 def test_results_dir_counts_only_with_success_marker(spark, documents, tmp_path, monkeypatch):

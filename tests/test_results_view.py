@@ -65,3 +65,22 @@ def test_a_small_known_job_sorts_in_one_task(spark, tmp_path, monkeypatch):
             assert [r["id"] for r in view.collect()] == list(range(ROWS)), per_batch
     finally:
         spark.conf.set(key, before)
+
+
+def test_an_attached_infer_opens_its_results_file_once(spark, tmp_path, monkeypatch):
+    """Waiting for a job reads nothing: the only read of the job's file
+    is the one that builds the results view."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **kw):
+        reads.append(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    res = SutroSpark(spark).infer(["alpha", "beta"], output_schema=SCHEMA)
+    assert len(reads) == 1
+    assert [r["title"] for r in res.collect()] == ["ALPHA", "BETA"]
