@@ -337,15 +337,9 @@ def main(argv: list[str] | None = None) -> int:
         elif args.jobs_cmd == "attach":
             return jobs_attach(args.job_id, latest=args.latest)
         else:
-            # jobs live in their own process's registry, so a new one
-            # lists none: the CLI shows the reference's table, empty
-            from sutro_spark.plans.jobs import JobRegistry
-            from sutro_spark.session import get_spark
-
-            format_jobs_table(
-                JobRegistry(get_spark("cli", cpus=4)).jobs_table(),
-                limit=None if args.all else 25,
-            ).show(truncate=False)
+            # jobs live in their own process's registry, so the CLI's
+            # lists none, with or without --all
+            print("No jobs found.")
     return 0
 
 

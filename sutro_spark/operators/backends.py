@@ -22,10 +22,10 @@ classify / score / rank / embed) is *expressible in ANSI SQL* and hence
 checkable against the DuckDB oracle (SURVEY.md §5).
 
 ``HttpBackend`` runs each Arrow batch as one remote job (submit → poll
-→ fetch) named ``batch-<digest>``, a sha256 of the full request, so a
-re-run of the same batch carries the same name. Its retry budgets are
+→ fetch) named ``batch-<digest>``, a sha256 of the payload it sends, so
+a re-run of the same batch carries the same name. Its retry budgets are
 the reference's, as module constants: ``MAX_RETRIES`` 524 retries per
-status poll (sdk.py:109) and ``FETCH_RETRIES`` results fetches
+GET (sdk.py:109) and ``FETCH_RETRIES`` results fetches
 ``FETCH_INTERVAL_S`` apart (sdk.py:410-411).
 """
 
@@ -204,82 +204,31 @@ class RequestsTransport:
         return resp.status_code, body
 
 
-class HttpClient:
-    """Authenticated request helper with the reference's retry contract
-    (/root/reference/sutro/sdk.py:103-177):
-
-    - ``Authorization: Key <api_key>`` header, base_url/endpoint join;
-    - ONLY Cloudflare-524 timeouts are retried, with exponential
-      1, 2, 4, ... second backoff, up to ``max_retries`` times;
-    - any other non-2xx raises :class:`HttpStatusError` immediately;
-    - ``max_retries=0`` re-raises the initial 524 untouched.
-    """
-
-    def __init__(
-        self,
-        base_url: str,
-        api_key: str = "",
-        *,
-        transport: Transport | None = None,
-        sleep=None,
-    ):
-        self.base_url = base_url
-        self.api_key = api_key
-        self.transport = transport if transport is not None else RequestsTransport()
-        self._sleep = sleep if sleep is not None else __import__("time").sleep
-
-    def do_request(
-        self, method: str, endpoint: str, *, json: dict | None = None, max_retries: int = 5
-    ) -> dict:
-        url = self.base_url.rstrip("/") + "/" + endpoint.lstrip("/")
-        headers = {"Authorization": f"Key {self.api_key}"}
-
-        def attempt() -> dict:
-            status, body = self.transport.request(method, url, headers=headers, json=json)
-            if status >= 400:
-                raise HttpStatusError(status, body)
-            return body
-
-        try:
-            return attempt()
-        except HttpStatusError as e:
-            if e.status_code != 524 or max_retries <= 0:
-                raise
-            for i in range(max_retries):
-                self._sleep(2**i)
-                try:
-                    return attempt()
-                except HttpStatusError as retry_err:
-                    if retry_err.status_code != 524 or i == max_retries - 1:
-                        raise
-            raise  # pragma: no cover - loop always returns or raises
-
-
 class HttpBackend:
     """Real-service backend: ships prompt batches to a sutro-style HTTP
     API and returns positionally aligned outputs.
 
     Each Arrow batch is one remote job, as each reference request is
-    one job. The wire protocol mirrors the reference end to end:
+    one job. The wire protocol mirrors the reference end to end
+    (sdk.py:103-177, 216-254, 407-425):
 
+    - every request carries ``Authorization: Key <api_key>``; only a
+      Cloudflare 524 on a GET is retried, up to ``MAX_RETRIES`` times
+      with 1, 2, 4, ... s backoff. A POST is sent once: a 524 on
+      ``batch-inference`` is ambiguous about whether the job was
+      created, so a submission is NEVER retried (sdk.py:247-252). Any
+      other non-2xx raises :class:`HttpStatusError` at once;
     - submit: ``POST batch-inference`` with the reference payload shape
-      (model, inputs, job_priority, json_schema, system_prompt,
-      cost_estimate, sampling_params, random_seed_per_input,
-      truncate_rows, name, description — sdk.py:216-232), and
-      ``max_retries=0``: a 524 is ambiguous about whether the job was
-      created, so the submission is NEVER retried (sdk.py:247-252);
-    - name: ``batch-<digest>``, the first 16 hex digits of a sha256
-      over the model, system prompt, schema, sampling params, seed
-      flag and every input. A Spark task retry or speculative attempt
-      of the same batch sends the same name, so a deduplicating server
-      can drop the copy; batches that differ in any input or parameter
-      never share one. 22 characters, within the reference's 45;
-    - poll: ``GET job-status/{job_id}`` every ``poll_interval`` s, each
-      GET retried on a 524 up to ``MAX_RETRIES`` times by
-      ``HttpClient.do_request``;
-    - results: ``POST job-results``, retried on any HTTP error up to
-      ``FETCH_RETRIES`` times ``FETCH_INTERVAL_S`` apart for the
-      results-write race (sdk.py:407-425);
+      (sdk.py:216-232), named ``batch-<digest>``: the first 16 hex
+      digits of a sha256 over the payload with its name still null. A
+      Spark task retry or speculative attempt of the same batch sends
+      the same name, so a deduplicating server can drop the copy;
+      batches that differ in any input or parameter never share one.
+      22 characters, within the reference's 45;
+    - poll: ``GET job-status/{job_id}`` every ``poll_interval`` s;
+    - results: ``POST job-results`` with logprobs, retried on any HTTP
+      error up to ``FETCH_RETRIES`` times ``FETCH_INTERVAL_S`` apart
+      for the results-write race (sdk.py:407-425);
     - alignment: the server returns ``outputs`` positionally aligned
       with ``inputs``; a length mismatch is a hard error, never a
       silent truncation.
@@ -302,10 +251,26 @@ class HttpBackend:
         max_polls: int = 10_000,
         sleep=None,
     ):
+        self.base_url = base_url
+        self.api_key = api_key
+        self.transport = transport if transport is not None else RequestsTransport()
         self.sleep = sleep if sleep is not None else time.sleep
-        self.client = HttpClient(base_url, api_key, transport=transport, sleep=self.sleep)
         self.poll_interval = poll_interval
         self.max_polls = max_polls
+
+    def _request(self, method: str, endpoint: str, json: dict | None = None) -> dict:
+        url = self.base_url.rstrip("/") + "/" + endpoint.lstrip("/")
+        headers = {"Authorization": f"Key {self.api_key}"}
+        retries = MAX_RETRIES if method == "GET" else 0
+        for i in range(retries + 1):
+            if i:
+                self.sleep(2 ** (i - 1))
+            status, body = self.transport.request(method, url, headers=headers, json=json)
+            if status < 400:
+                return body
+            if status != 524:
+                break
+        raise HttpStatusError(status, body)
 
     # -- wire steps, each independently testable ------------------------
     def build_payload(
@@ -317,39 +282,32 @@ class HttpBackend:
         output_schema: dict | None = None,
         sampling_params: dict | None = None,
         random_seed_per_input: bool = False,
-        job_priority: int = 0,
-        truncate_rows: bool = True,
-        name: str | None = None,
-        description: str | None = None,
-        cost_estimate: bool = False,
     ) -> dict:
-        return {
+        payload = {
             "model": model,
             "inputs": inputs,
-            "job_priority": job_priority,
+            "job_priority": 0,
             "json_schema": output_schema,
             "system_prompt": system_prompt,
-            "cost_estimate": cost_estimate,
+            "cost_estimate": False,
             "sampling_params": sampling_params,
             "random_seed_per_input": random_seed_per_input,
-            "truncate_rows": truncate_rows,
-            "name": name,
-            "description": description,
+            "truncate_rows": True,
+            "name": None,
+            "description": None,
         }
+        # keys unsorted: a schema's property order changes the outputs
+        digest = hashlib.sha256(json.dumps(payload).encode()).hexdigest()[:16]
+        payload["name"] = f"batch-{digest}"
+        return payload
 
     def submit(self, payload: dict) -> str:
-        # Non-idempotent: exactly one attempt (max_retries=0).
-        body = self.client.do_request(
-            "POST", "batch-inference", json=payload, max_retries=0
-        )
-        return body["results"]
+        return self._request("POST", "batch-inference", payload)["results"]
 
     def poll_until_done(self, job_id: str) -> str:
         status = "PENDING"
         for _ in range(self.max_polls):
-            body = self.client.do_request(
-                "GET", f"job-status/{job_id}", max_retries=MAX_RETRIES
-            )
+            body = self._request("GET", f"job-status/{job_id}")
             status = body["results"] if isinstance(body.get("results"), str) else body.get(
                 "results", {}
             ).get("status", "UNKNOWN")
@@ -358,64 +316,41 @@ class HttpBackend:
             self.sleep(self.poll_interval)
         raise TimeoutError(f"job {job_id} not terminal after {self.max_polls} polls")
 
-    def fetch_results(self, job_id: str, *, include_cumulative_logprobs: bool = True) -> dict:
-        def fetch() -> dict:
-            return self.client.do_request(
-                "POST",
-                "job-results",
-                json={
-                    "job_id": job_id,
-                    "include_cumulative_logprobs": include_cumulative_logprobs,
-                },
-                max_retries=0,
-            )["results"]
-
+    def fetch_results(self, job_id: str) -> dict:
+        request = {"job_id": job_id, "include_cumulative_logprobs": True}
         # results-write race: the job reports SUCCEEDED before its
         # results land, so any HTTP error is retried linearly
         for _ in range(FETCH_RETRIES):
             try:
-                return fetch()
+                return self._request("POST", "job-results", request)["results"]
             except HttpStatusError:
                 self.sleep(FETCH_INTERVAL_S)
-        return fetch()
+        return self._request("POST", "job-results", request)["results"]
 
-    def _run_job(
+    # -- Backend protocol ----------------------------------------------
+    def generate(
         self,
-        inputs: list,
+        prompts: pd.Series,
         *,
-        model: str,
-        system_prompt: str,
-        output_schema: dict | None,
-        sampling_params: dict | None,
-        random_seed_per_input: bool,
-    ) -> tuple[list, list]:
-        """One full submit→poll→fetch job; returns (outputs, logprobs)
-        positionally aligned with ``inputs``."""
-        # the full request identity, not the texts alone: a server
-        # deduping on job name must never coalesce two jobs that share
-        # inputs but differ in parameters — they have different outputs
-        digest = hashlib.sha256(
-            "\x1f".join(
-                [
-                    model,
-                    system_prompt,
-                    repr(sorted((output_schema or {}).items())),
-                    repr(sorted((sampling_params or {}).items())),
-                    repr(random_seed_per_input),
-                ]
-                + [str(x) for x in inputs]
-            ).encode()
-        ).hexdigest()[:16]
-        payload = self.build_payload(
-            inputs,
-            model=model,
-            system_prompt=system_prompt,
-            output_schema=output_schema,
-            sampling_params=sampling_params,
-            random_seed_per_input=random_seed_per_input,
-            name=f"batch-{digest}",
+        model: str = "gpt-oss-20b",
+        system_prompt: str = "",
+        output_schema: dict | None = None,
+        sampling_params: dict | None = None,
+        random_seed_per_input: bool = False,
+    ) -> pd.DataFrame:
+        """One full submit→poll→fetch job, its outputs and logprobs
+        positionally aligned with ``prompts``."""
+        inputs = prompts.fillna("").tolist()
+        job_id = self.submit(
+            self.build_payload(
+                inputs,
+                model=model,
+                system_prompt=system_prompt,
+                output_schema=output_schema,
+                sampling_params=sampling_params,
+                random_seed_per_input=random_seed_per_input,
+            )
         )
-        job_id = self.submit(payload)
         status = self.poll_until_done(job_id)
         if status != "SUCCEEDED":
             raise RuntimeError(f"job {job_id} terminated with status {status}")
@@ -429,27 +364,6 @@ class HttpBackend:
         logprobs = results.get("cumulative_logprobs") or [None] * len(outputs)
         if len(logprobs) != len(outputs):
             raise RuntimeError(f"cumulative_logprobs misaligned (job {job_id})")
-        return outputs, logprobs
-
-    # -- Backend protocol ----------------------------------------------
-    def generate(
-        self,
-        prompts: pd.Series,
-        *,
-        model: str = "gpt-oss-20b",
-        system_prompt: str = "",
-        output_schema: dict | None = None,
-        sampling_params: dict | None = None,
-        random_seed_per_input: bool = False,
-    ) -> pd.DataFrame:
-        outputs, logprobs = self._run_job(
-            prompts.fillna("").tolist(),
-            model=model,
-            system_prompt=system_prompt,
-            output_schema=output_schema,
-            sampling_params=sampling_params,
-            random_seed_per_input=random_seed_per_input,
-        )
         out = pd.Series(outputs, index=prompts.index, dtype=object)
         lp = pd.Series(logprobs, index=prompts.index, dtype="float64")
         mask = prompts.isna()

@@ -105,8 +105,8 @@ def llm_transform(
                 pdf["cumulative_logprobs"] = res["cumulative_logprobs"].to_numpy()
             if progress_accumulator is not None:
                 # rows-completed stream (C5): accumulator updates flow
-                # to the driver per task; ProgressTracker applies its
-                # monotonic-max rule on read
+                # to the driver per task; JobRegistry.get_job_status
+                # reads them with the monotonic-max rule
                 progress_accumulator.add(len(pdf))
             yield pdf
 

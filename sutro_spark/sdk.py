@@ -140,10 +140,11 @@ class SutroSpark:
             sampling_params=sampling_params,
             random_seed_per_input=random_seed_per_input,
             truncate_chars=8192 * 4 if truncate_rows else None,
+            # the job's file holds everything the results view can
+            # resurface: the logprobs and, as `inputs`, the shipped
+            # prompt (the reference stores both, sdk.py:1251-1276)
+            include_logprobs=True,
             backend=self.backend,
-            # carry the shipped prompt so results/cache can resurface it
-            # as `inputs` (reference stores inputs with results,
-            # sdk.py:1251-1276)
             keep_prompt=True,
         )
         if schema_dict is not None:
@@ -312,6 +313,10 @@ class SutroSpark:
         if res is None:
             raise ValueError(f"no results for job {job_id}")
         output_schema = output_schema_of(res)
+        # dropped before the unpack and the join, so an unasked column
+        # never collides with a JSON field or an original column
+        if not include_cumulative_logprobs and "cumulative_logprobs" in res.columns:
+            res = res.drop("cumulative_logprobs")
         res = res.withColumnRenamed("outputs", output_column)
         if unpack_json:
             res = unpack_json_outputs(res, output_column, output_schema)
@@ -321,8 +326,6 @@ class SutroSpark:
                 if include_inputs
                 else res.drop("__prompt")
             )
-        if not include_cumulative_logprobs and "cumulative_logprobs" in res.columns:
-            res = res.drop("cumulative_logprobs")
         if with_original_df is not None:
             orig = (
                 with_original_df

@@ -59,14 +59,60 @@ def test_docs_prints_url(capsys):
 
 def test_datasets_download_roundtrip(tmp_path, monkeypatch, capsys):
     monkeypatch.setenv("SUTRO_SPARK_WAREHOUSE", str(tmp_path / "wh"))
+    assert main(["datasets", "list"]) == 0  # no warehouse yet
+    assert capsys.readouterr().out == "\n"
     src = tmp_path / "in.txt"
     src.write_text("payload")
     assert main(["datasets", "upload", "ds1", str(src)]) == 0
+    assert main(["datasets", "create", "ds0"]) == 0
+    capsys.readouterr()
+    assert main(["datasets", "list"]) == 0
+    assert capsys.readouterr().out == "ds0\nds1\n"
     dest = tmp_path / "out"
     dest.mkdir()
     assert main(["datasets", "download", "ds1", str(dest)]) == 0
     assert (dest / "in.txt").read_text() == "payload"
     assert "in.txt" in capsys.readouterr().out
+
+
+def test_cache_show_and_clear(isolated_cache, capsys):
+    assert main(["cache", "show"]) == 0  # no cache directory yet
+    assert capsys.readouterr().out == ""
+    (isolated_cache / "job-a").mkdir(parents=True)
+    (isolated_cache / "job-a" / "part-0.parquet").write_bytes(b"x" * 2000)
+    (isolated_cache / "stray").write_bytes(b"x" * 3000)
+    assert main(["cache", "show"]) == 0
+    assert capsys.readouterr().out == "job-a\t2e-06 GB\nstray\t3e-06 GB\n"
+    assert main(["cache", "clear"]) == 0
+    assert capsys.readouterr().out == "cleared 2 entries\n"
+    assert not isolated_cache.exists()
+    assert main(["cache", "clear"]) == 0
+    assert capsys.readouterr().out == "cleared 0 entries\n"
+
+
+def test_facade_parity_wrappers_reach_the_cli_and_config(
+    spark, isolated_config, tmp_path, monkeypatch
+):
+    from sutro_spark.sdk import SutroSpark
+
+    monkeypatch.setenv("SUTRO_SPARK_WAREHOUSE", str(tmp_path / "wh"))
+    so = SutroSpark(spark)
+    assert so.try_authentication() is True  # no config: the stub engine
+    so.set_api_key("sk-facade")
+    so.set_base_url("https://facade.example")
+    cfg = json.loads(isolated_config.read_text())
+    assert cfg == {"api_key": "sk-facade", "base_url": "https://facade.example"}
+    assert so.try_authentication() is False  # a remote URL needs the network
+    src = tmp_path / "in.txt"
+    src.write_text("payload")
+    assert so.create_dataset("ds") == str(tmp_path / "wh" / "ds")
+    assert so.upload_to_dataset("ds", str(src)) == ["in.txt"]
+    assert so.list_datasets() == ["ds"]
+    assert so.list_dataset_files("ds") == ["in.txt"]
+    dest = tmp_path / "out"
+    dest.mkdir()
+    assert so.download_from_dataset("ds", str(dest)) == ["in.txt"]
+    assert (dest / "in.txt").read_text() == "payload"
 
 
 def test_jobs_status_unknown_and_cached(spark, documents, isolated_cache):
@@ -175,6 +221,9 @@ def test_job_commands_answer_from_the_cache_without_spark(
     assert capsys.readouterr().out == "No jobs found.\n"
     assert main(["jobs", "cancel", "job-cli-none"]) == 1
     assert capsys.readouterr().out == "Job job-cli-none not found\n"
+    for argv in (["jobs", "list"], ["jobs", "list", "--all"]):
+        assert main(argv) == 0
+        assert capsys.readouterr().out == "No jobs found.\n"
 
 
 def test_jobs_cancel_reports_what_it_cannot_cancel(spark, documents, isolated_cache, capsys):

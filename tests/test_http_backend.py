@@ -1,7 +1,7 @@
 """HttpBackend wire-protocol tests against a fake transport — the
 offline mirror of the reference's mock-patched requests suite
-(/root/reference/tests/test_sdk.py:258-306): 524s never retried on
-submit, retried with exponential backoff on idempotent GETs, results
+(/root/reference/tests/test_sdk.py:258-306): 524s never retried on a
+POST, retried with exponential backoff on idempotent GETs, results
 fetch linearly retried, outputs positionally aligned."""
 
 from __future__ import annotations
@@ -14,8 +14,8 @@ import pytest
 from sutro_spark.operators.backends import (
     FETCH_INTERVAL_S,
     FETCH_RETRIES,
+    MAX_RETRIES,
     HttpBackend,
-    HttpClient,
     HttpStatusError,
 )
 
@@ -48,57 +48,46 @@ def make_backend(script, **kw):
 
 
 def test_submit_never_retried_after_524():
-    b, t, _ = make_backend({"batch-inference": [(524, {"error": "timeout"})]})
+    # a POST has no 524 backoff: the 524 is re-raised untouched
+    b, t, log = make_backend({"batch-inference": [(524, {"error": "timeout"})]})
     with pytest.raises(HttpStatusError) as e:
         b.submit(b.build_payload(["x"], model="m"))
     assert e.value.status_code == 524
     assert len(t.calls) == 1  # reference: mock_post.assert_called_once()
-
-
-def test_zero_retry_budget_reraises_initial_524():
-    t = FakeTransport({"job-status": [(524, {})]})
-    log, sleep = _sleeps()
-    c = HttpClient("https://api.example.test", "k", transport=t, sleep=sleep)
-    with pytest.raises(HttpStatusError):
-        c.do_request("GET", "job-status/test-job", max_retries=0)
-    assert len(t.calls) == 1 and log == []
+    assert log == []
 
 
 def test_get_retries_after_524_with_backoff():
-    t = FakeTransport({"job-status": [(524, {}), (200, {"results": "SUCCEEDED"})]})
-    log, sleep = _sleeps()
-    c = HttpClient("https://api.example.test", "k", transport=t, sleep=sleep)
-    body = c.do_request("GET", "job-status/test-job", max_retries=1)
-    assert body == {"results": "SUCCEEDED"}
-    assert len(t.calls) == 2
+    b, t, log = make_backend({"job-status": [(524, {}), (200, {"results": "SUCCEEDED"})]})
+    assert b.poll_until_done("test-job") == "SUCCEEDED"
+    assert [c[0] for c in t.calls] == ["GET", "GET"]
     assert log == [1]  # reference: mock_sleep.assert_called_once_with(1)
 
 
 def test_exponential_backoff_sequence_then_raise():
-    t = FakeTransport({"job-status": [(524, {})]})
-    log, sleep = _sleeps()
-    c = HttpClient("https://api.example.test", "k", transport=t, sleep=sleep)
-    with pytest.raises(HttpStatusError):
-        c.do_request("GET", "job-status/j", max_retries=3)
-    assert len(t.calls) == 4
-    assert log == [1, 2, 4]
+    b, t, log = make_backend({"job-status": [(524, {})]})
+    with pytest.raises(HttpStatusError) as e:
+        b.poll_until_done("j")
+    assert e.value.status_code == 524
+    assert len(t.calls) == MAX_RETRIES + 1
+    assert log == [1, 2, 4, 8, 16]
 
 
 def test_non_524_error_never_retried():
-    t = FakeTransport({"job-status": [(500, {"error": "boom"})]})
-    log, sleep = _sleeps()
-    c = HttpClient("https://api.example.test", "k", transport=t, sleep=sleep)
+    b, t, log = make_backend({"job-status": [(500, {"error": "boom"})]})
     with pytest.raises(HttpStatusError) as e:
-        c.do_request("GET", "job-status/j", max_retries=5)
+        b.poll_until_done("j")
     assert e.value.status_code == 500
     assert len(t.calls) == 1 and log == []
 
 
 def test_results_fetch_linear_retry_on_write_race():
+    # each fetch is one POST: a 524 takes the fetch's linear retry,
+    # never the GET's exponential one
     b, t, log = make_backend(
         {
             "job-results": [
-                (404, {}),
+                (524, {}),
                 (404, {}),
                 (200, {"results": {"outputs": ["a"], "cumulative_logprobs": [-0.1]}}),
             ]
@@ -238,7 +227,10 @@ PROMPTS = [f"p{i:02d}" for i in range(8)]
 REQUEST = dict(
     model="m",
     system_prompt="sys",
-    output_schema={"type": "object", "properties": {"a": {"type": "string"}}},
+    output_schema={
+        "type": "object",
+        "properties": {"a": {"type": "string"}, "b": {"type": "integer"}},
+    },
     sampling_params={"temperature": 0.2},
     random_seed_per_input=False,
 )
@@ -266,6 +258,17 @@ def test_generate_is_one_job_with_a_deterministic_name():
         {"model": "m2"},
         {"system_prompt": "other"},
         {"output_schema": None},
+        # the server fills properties in declaration order, so a schema
+        # whose properties are listed in another order is another request
+        pytest.param(
+            {
+                "output_schema": {
+                    "type": "object",
+                    "properties": {"b": {"type": "integer"}, "a": {"type": "string"}},
+                }
+            },
+            id="schema_property_order",
+        ),
         {"sampling_params": {"temperature": 0.7}},
         {"random_seed_per_input": True},
     ],
@@ -273,3 +276,4 @@ def test_generate_is_one_job_with_a_deterministic_name():
 )
 def test_any_change_to_the_request_changes_the_name(changes):
     assert _submitted_names(**changes) != _submitted_names()
+

@@ -50,6 +50,14 @@ def test_extensionless_path_routes_to_text(spark, tmp_path):
     assert prepare_input_data(spark, str(p)).count() == 2
 
 
+def test_parquet_path_routes_to_the_parquet_reader(spark, tmp_path):
+    p = tmp_path / "in.Parquet"
+    pd.DataFrame({"prompt": ["x", "y", "z"]}).to_parquet(p)
+    df = prepare_input_data(spark, str(p))
+    assert ROW_ID in df.columns
+    assert sorted(r["prompt"] for r in df.collect()) == ["x", "y", "z"]
+
+
 def test_unsupported_inputs_raise(spark):
     with pytest.raises(ValueError, match="unsupported file type"):
         prepare_input_data(spark, "data.xlsx")

@@ -28,6 +28,9 @@ def test_job_submit_await_results(spark, documents):
     assert job.rows_total == documents.count()
     assert job.rows_completed == documents.count()
     assert job.datetime_completed is not None
+    # a finished job is past cancelling
+    reg.cancel_job(job_id)
+    assert reg.get_job_status(job_id) is JobStatus.SUCCEEDED
 
 
 def test_job_durable_materialization_and_progress(spark, documents, tmp_path, monkeypatch):
@@ -53,6 +56,9 @@ def test_job_validation_and_failure(spark, documents):
         reg.submit(documents, name="x" * 46)
     with pytest.raises(ValueError, match="512"):
         reg.submit(documents, description="x" * 513)
+    with pytest.raises(ValueError, match="unknown priority 7"):
+        reg.submit(documents, priority=7)
+    assert reg.jobs == {}
     # a plan that fails at execution time → FAILED with a reason
     bad = documents.withColumn("boom", F.expr("raise_error('kaboom')"))
     job_id = reg.submit(bad, name="failing")
@@ -99,6 +105,8 @@ def test_cancelled_job_leaves_no_results(spark, documents, tmp_path, monkeypatch
     while reg.get_job_status(job_id) is not JobStatus.RUNNING and time.time() < deadline:
         time.sleep(0.05)
     time.sleep(1.0)  # inside the first row's sleep
+    with pytest.raises(TimeoutError, match="did not complete within 0.1s"):
+        reg.await_job_completion(job_id, timeout=0.1)
     reg.cancel_job(job_id)
     assert reg.await_job_completion(job_id, timeout=120) is JobStatus.CANCELLED
     assert reg.get_job_status(job_id) is JobStatus.CANCELLED
@@ -150,6 +158,11 @@ def test_awaiting_an_unknown_job_returns_at_once(spark):
     assert so.registry.await_job_completion("job-nope", timeout=60) is JobStatus.UNKNOWN
     assert so.await_job_completion("job-nope", timeout=60) is None
     assert time.perf_counter() - t0 < 5
+    # nor can it report on, or cancel, a job it never ran
+    assert so.registry.get_job_status("job-nope") is JobStatus.UNKNOWN
+    assert so.get_job_status("job-nope") == "UNKNOWN"
+    so.cancel_job("job-nope")
+    assert so.registry.jobs == {}
 
 
 def test_results_dir_counts_only_with_success_marker(spark, documents, tmp_path, monkeypatch):

@@ -84,3 +84,24 @@ def test_an_attached_infer_opens_its_results_file_once(spark, tmp_path, monkeypa
     res = SutroSpark(spark).infer(["alpha", "beta"], output_schema=SCHEMA)
     assert len(reads) == 1
     assert [r["title"] for r in res.collect()] == ["ALPHA", "BETA"]
+
+
+def test_a_facade_job_keeps_its_logprobs_for_the_view_that_asks(spark, tmp_path, monkeypatch):
+    """An attached ``infer`` writes the backend's logprobs into the job's
+    file; the view returns them only when asked, last, and the CLI's
+    ``jobs results`` flag reaches the same column."""
+    monkeypatch.setenv("SUTRO_SPARK_CACHE", str(tmp_path))
+    so = SutroSpark(spark)
+    res = so.infer(["alpha", "be", "gamma ray"], output_schema=SCHEMA, name="logprobs")
+    job_id = next(j for j, job in so.registry.jobs.items() if job.name == "logprobs")
+    assert "cumulative_logprobs" not in res.columns
+    assert "cumulative_logprobs" not in so.get_job_results(job_id).columns
+    for view in (
+        so.get_job_results(job_id, include_inputs=True, include_cumulative_logprobs=True),
+        jobs_results(job_id, include_inputs=True, include_cumulative_logprobs=True),
+    ):
+        assert view.columns == ["inputs", "prompt", "title", "cumulative_logprobs"]
+        rows = view.collect()
+        assert [r["inputs"] for r in rows] == ["alpha", "be", "gamma ray"]
+        # the stub's documented rule: -len(prompt) / 100
+        assert [r["cumulative_logprobs"] for r in rows] == [-len(r["inputs"]) / 100 for r in rows]

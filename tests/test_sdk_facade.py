@@ -107,6 +107,11 @@ def test_templates_through_facade(so, documents):
     assert all(1 <= r["score"] <= 5 for r in sc.collect())
     emb = so.embed(docs, column="text", dim=4)
     assert len(emb.first()["embedding"]) == 4
+    # function calls ship each record as JSON (the stub echoes it)
+    one = so.run_function("fn", {"a": 1})
+    assert one["response"] == 'ECHO: {"A": 1}' and one["predictions"] == [one["response"]]
+    batch = so.batch_run_function("fn", [{"a": 1}, {"a": 22}])
+    assert sorted(r["outputs"] for r in batch.collect()) == ['ECHO: {"A":1}', 'ECHO: {"A":22}']
 
 
 def test_jobs_table_and_quotas(so):
@@ -189,12 +194,20 @@ def test_attach_unknown_job_returns_none(so, capsys):
 
 def test_attach_cancelled_job_reports_state(so, documents, capsys):
     job_id = so.infer(documents.limit(3), column="text", stay_attached=False)
-    so.registry.cancel_job(job_id)
+    so.cancel_job(job_id)
     res = so.await_job_completion(job_id, timeout=120)
     if res is not None:  # stub job outran the cancel — nothing to assert
         pytest.skip("job finished before cancel")
     assert so.attach(job_id) is None
     assert "cancelled" in capsys.readouterr().out
+
+
+def test_attached_infer_of_a_failed_job_raises_its_status_and_reason(so, documents):
+    bad = documents.limit(3).withColumn("boom", F.expr("raise_error('kaboom')"))
+    with pytest.raises(RuntimeError, match=r"job job-\w+ failed: .*kaboom"):
+        so.infer(bad, column="text", name="failing")
+    job_id = next(j for j, job in so.registry.jobs.items() if job.name == "failing")
+    assert so.get_job_status(job_id) == "FAILED"
 
 
 def test_id_column_restricted_to_url_inputs(so, documents):
