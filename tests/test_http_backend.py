@@ -57,6 +57,16 @@ def test_submit_never_retried_after_524():
     assert log == []
 
 
+def test_zero_retry_budget_reraises_initial_524():
+    # the request loop gives a POST a zero 524 budget, whatever the
+    # endpoint: the first 524 is re-raised with no backoff sleep
+    b, t, log = make_backend({"job-status": [(524, {}), (200, {"results": "SUCCEEDED"})]})
+    with pytest.raises(HttpStatusError) as e:
+        b._request("POST", "job-status/test-job")
+    assert e.value.status_code == 524
+    assert len(t.calls) == 1 and log == []
+
+
 def test_get_retries_after_524_with_backoff():
     b, t, log = make_backend({"job-status": [(524, {}), (200, {"results": "SUCCEEDED"})]})
     assert b.poll_until_done("test-job") == "SUCCEEDED"
